@@ -872,8 +872,9 @@ def _feature_matrix_block(
     out["hurst"] = hurst
     out["nonzero_ratio"] = (X != 0).mean(axis=1)
 
-    # classical additive decomposition (n >= 3 guaranteed by
-    # MIN_BATCH_LEN): spike / linearity / curvature / e_acf / peak
+    # classical additive decomposition (MIN_BATCH_LEN only guarantees
+    # n >= 2; the span gates below cover the short cases): spike /
+    # linearity / curvature / e_acf / peak
     t_hat, s_hat, rem, (a, b) = classical_additive_matrix(X, s)
     span = b - a
     if span >= 3:

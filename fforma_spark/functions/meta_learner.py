@@ -18,6 +18,27 @@ Montero-Manso et al. 2020):
 * predict: weights = softmax(F(x)); y_hat = Σ_k w_k · forecast_k
   (_XGBoost.py:137-163).
 
+Tree layout and fit: ``fit`` argsorts every feature column once
+(stable), and each node keeps its rows' share of that order, shape
+(d, rows), so no node sorts again. A node searches all d features in
+one array pass: per-feature prefix sums of g and h, then a (d, rows-1)
+gain matrix. A fitted tree is five flat arrays (feature, threshold,
+left, right, value; leaves have feature -1 and point to themselves),
+so ``predict`` is a vectorized descent of ``depth`` steps, and ``fit``
+updates the raw scores from the leaf membership the build already
+computed rather than predicting again. The fit is bit-identical to a
+per-node loop over features that argsorts each node afresh (pinned by
+tests/test_meta_learner_parity.py against that recursive tree):
+
+1. a stable sort filtered to a subset of rows is that subset's stable
+   sort, so every node sees the same row order per feature;
+2. ``np.cumsum`` along an axis adds sequentially, element by element,
+   exactly as the 1-D cumsum of each feature did; node totals are 1-D
+   sums over the node's rows in their original order, as before;
+3. the split is the first maximum within a feature, then the first
+   feature holding the overall maximum, taken only if its gain is > 0:
+   the loop's strict ``>`` tie-break, feature by feature.
+
 Scale shape: training data is ONE row per series (features + per-model
 errors) — collected to the driver, which is the same shape the
 reference trains on and is small even for millions of series;
@@ -26,6 +47,7 @@ weight APPLICATION is distributed (broadcast join + weighted sum).
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -42,88 +64,113 @@ def softmax(z: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class _Node:
-    feature: int = -1
-    threshold: float = 0.0
-    left: "_Node | None" = None
-    right: "_Node | None" = None
-    value: float = 0.0
-    is_leaf: bool = False
-
-
 class _Tree:
-    def __init__(self, max_depth: int, reg_lambda: float, min_child_weight: float,
-                 gamma: float = 0.0):
-        self.max_depth = max_depth
-        self.lam = reg_lambda
-        self.mcw = min_child_weight
-        self.gamma = gamma
-        self.root: _Node | None = None
+    """One fitted regression tree as flat node arrays.
 
-    def _leaf(self, g: np.ndarray, h: np.ndarray) -> _Node:
-        H = h.sum()
-        if H < self.mcw:
+    Node 0 is the root. An inner node sends a row to ``left`` when
+    ``x[feature] < threshold``, else to ``right``; a leaf has feature -1
+    and points to itself on both sides, so a descent of ``depth`` steps
+    ends on every row's leaf, however deep that leaf is.
+    """
+
+    def __init__(self, feature, threshold, left, right, value, depth):
+        self.feature = np.asarray(feature, dtype=np.intp)
+        self.threshold = np.asarray(threshold, dtype=np.float64)
+        self.left = np.asarray(left, dtype=np.intp)
+        self.right = np.asarray(right, dtype=np.intp)
+        self.value = np.asarray(value, dtype=np.float64)
+        self.depth = depth
+
+    def predict(self, X: np.ndarray) -> np.ndarray:
+        node = np.zeros(len(X), dtype=np.intp)
+        rows = np.arange(len(X))
+        for _ in range(self.depth):
+            go_left = X[rows, self.feature[node]] < self.threshold[node]
+            node = np.where(go_left, self.left[node], self.right[node])
+        return self.value[node]
+
+
+def _best_split(idx, xs, g, h, G, H, lam, mcw):
+    """Best (feature, threshold) of one node, or None.
+
+    ``idx``/``xs`` are the node's row ids and values sorted per feature,
+    shape (d, cnt). Every feature is searched in one array pass: the
+    left prefix sums of g and h after each sorted position, then the
+    gain of splitting there, allowed only between distinct values and
+    when both sides hold at least ``mcw`` of hessian.
+    """
+    gl = np.cumsum(g[idx], axis=1)[:, :-1]
+    hl = np.cumsum(h[idx], axis=1)[:, :-1]
+    gr, hr = G - gl, H - hl
+    parent = G * G / (H + lam)
+    ok = (xs[:, 1:] != xs[:, :-1]) & (hl >= mcw) & (hr >= mcw)
+    gain = 0.5 * (gl * gl / (hl + lam) + gr * gr / (hr + lam) - parent)
+    gain = np.where(ok, gain, -np.inf)
+    # the first maximum in feature-major order is the first position of
+    # the first feature holding the largest gain; a feature with a NaN
+    # gain never wins (its own argmax would be that NaN)
+    at = int(gain.argmax())
+    if np.isnan(gain.flat[at]):
+        gain[np.isnan(gain).any(axis=1)] = -np.inf
+        at = int(gain.argmax())
+    if not gain.flat[at] > 0.0:
+        return None
+    j, i = divmod(at, gain.shape[1])
+    return j, float((xs[j, i] + xs[j, i + 1]) / 2)
+
+
+@np.errstate(divide="ignore", invalid="ignore")  # gains masked by ok
+def _grow(X, idx, xs, g, h, max_depth, lam, mcw):
+    """Fit one tree to gradients ``g`` and hessians ``h``.
+
+    ``idx``/``xs`` are X's presorted row ids and values, shape (d, n);
+    each child that may split again keeps its rows' share of them in the
+    same order, so no node sorts again. Returns the tree and every
+    training row's leaf value.
+    """
+    n, d = len(g), len(idx)
+    feature, threshold, left, right, value = [], [], [], [], []
+    per_row = np.empty(n)
+    depth = 0
+    # breadth first; a node's id is its position in this list
+    nodes = [(np.arange(n), idx, xs, 0)]
+    for k, (rows, n_idx, n_xs, level) in enumerate(nodes):
+        G, H = g[rows].sum(), h[rows].sum()
+        split = None
+        if level < max_depth and len(rows) >= 2:
+            split = _best_split(n_idx, n_xs, g, h, G, H, lam, mcw)
+        if split is None:
             # FFORMA hessians can be negative (softmax objective is
             # non-convex); xgboost handles that by pruning leaves whose
             # summed hessian is below min_child_weight. Take no step
             # rather than a Newton step against untrusted curvature.
-            return _Node(value=0.0, is_leaf=True)
-        return _Node(value=-g.sum() / (H + self.lam), is_leaf=True)
-
-    def _best_split(self, X: np.ndarray, g: np.ndarray, h: np.ndarray):
-        n, d = X.shape
-        G, H = g.sum(), h.sum()
-        parent = G * G / (H + self.lam)
-        best = (0.0, -1, 0.0)  # gain, feature, threshold
-        for j in range(d):
-            order = np.argsort(X[:, j], kind="stable")
-            xs = X[order, j]
-            gl = np.cumsum(g[order])[:-1]
-            hl = np.cumsum(h[order])[:-1]
-            # candidate split after position i: left = [0..i], right = rest;
-            # only between distinct feature values
-            valid = xs[1:] != xs[:-1]
-            if not valid.any():
-                continue
-            hr = H - hl
-            ok = valid & (hl >= self.mcw) & (hr >= self.mcw)
-            if not ok.any():
-                continue
-            gr = G - gl
-            gain = 0.5 * (
-                gl * gl / (hl + self.lam) + gr * gr / (hr + self.lam) - parent
-            ) - self.gamma
-            gain = np.where(ok, gain, -np.inf)
-            i = int(np.argmax(gain))
-            if gain[i] > best[0]:
-                best = (float(gain[i]), j, float((xs[i] + xs[i + 1]) / 2))
-        return best
-
-    def _build(self, X, g, h, depth) -> _Node:
-        if depth >= self.max_depth or len(g) < 2:
-            return self._leaf(g, h)
-        gain, j, thr = self._best_split(X, g, h)
-        if j < 0 or gain <= 0.0:
-            return self._leaf(g, h)
-        mask = X[:, j] < thr
-        node = _Node(feature=j, threshold=thr)
-        node.left = self._build(X[mask], g[mask], h[mask], depth + 1)
-        node.right = self._build(X[~mask], g[~mask], h[~mask], depth + 1)
-        return node
-
-    def fit(self, X, g, h):
-        self.root = self._build(X, g, h, 0)
-        return self
-
-    def predict(self, X: np.ndarray) -> np.ndarray:
-        out = np.empty(len(X))
-        for i, row in enumerate(X):
-            node = self.root
-            while not node.is_leaf:
-                node = node.left if row[node.feature] < node.threshold else node.right
-            out[i] = node.value
-        return out
+            v = 0.0 if H < mcw else -G / (H + lam)
+            feature.append(-1)
+            threshold.append(0.0)
+            left.append(k)
+            right.append(k)
+            value.append(v)
+            per_row[rows] = v
+            depth = max(depth, level)
+            continue
+        j, thr = split
+        goes = X[:, j] < thr
+        feature.append(j)
+        threshold.append(thr)
+        left.append(len(nodes))
+        right.append(len(nodes) + 1)
+        value.append(0.0)
+        on_left = goes[rows]
+        if level + 1 < max_depth:
+            sel = goes[n_idx]
+            nodes.append((rows[on_left], n_idx[sel].reshape(d, -1),
+                          n_xs[sel].reshape(d, -1), level + 1))
+            nodes.append((rows[~on_left], n_idx[~sel].reshape(d, -1),
+                          n_xs[~sel].reshape(d, -1), level + 1))
+        else:  # the children are leaves: only their rows matter
+            nodes.append((rows[on_left], None, None, level + 1))
+            nodes.append((rows[~on_left], None, None, level + 1))
+    return _Tree(feature, threshold, left, right, value, depth), per_row
 
 
 # ---------------------------------------------------------------------------
@@ -142,6 +189,7 @@ class NumpyFFORMA:
     min_child_weight: float = 1e-6
     trees_: list = field(default_factory=list, repr=False)
     loss_curve_: list = field(default_factory=list, repr=False)
+    fit_s_: float = field(default=0.0, init=False, repr=False)
 
     def _grad_hess(self, errors: np.ndarray, F: np.ndarray):
         p = softmax(F)
@@ -150,27 +198,36 @@ class NumpyFFORMA:
         hess = errors * p * (1.0 - p) - grad * p
         # hessians are handed to the trees RAW (possibly negative),
         # exactly like the reference hands them to xgboost
-        # (fforma/meta_learner/_XGBoost.py:65); _Tree guards low/negative
-        # curvature via min_child_weight (split gate + leaf no-step).
+        # (fforma/meta_learner/_XGBoost.py:65); the trees guard
+        # low/negative curvature via min_child_weight (split gate +
+        # leaf no-step).
         return grad, hess, float(L.mean())
 
     def fit(self, X: np.ndarray, errors: np.ndarray) -> "NumpyFFORMA":
+        t0 = time.perf_counter()
         X = np.asarray(X, dtype=np.float64)
         errors = np.asarray(errors, dtype=np.float64)
         n, k = errors.shape
+        # presort once: a stable sort filtered to a node's rows is that
+        # node's own stable sort
+        idx = np.argsort(X.T, axis=1, kind="stable")
+        xs = np.take_along_axis(X.T, idx, axis=1)
         F = np.zeros((n, k))
         for _ in range(self.n_rounds):
             grad, hess, loss = self._grad_hess(errors, F)
             self.loss_curve_.append(loss)
             round_trees = []
             for c in range(k):
-                t = _Tree(self.max_depth, self.reg_lambda, self.min_child_weight)
-                t.fit(X, grad[:, c], hess[:, c])
-                F[:, c] += self.learning_rate * t.predict(X)
+                t, leaf_values = _grow(
+                    X, idx, xs, grad[:, c], hess[:, c], self.max_depth,
+                    self.reg_lambda, self.min_child_weight,
+                )
+                F[:, c] += self.learning_rate * leaf_values
                 round_trees.append(t)
             self.trees_.append(round_trees)
         _, _, loss = self._grad_hess(errors, F)
         self.loss_curve_.append(loss)
+        self.fit_s_ = time.perf_counter() - t0
         return self
 
     def raw_scores(self, X: np.ndarray) -> np.ndarray:
@@ -230,7 +287,13 @@ def collect_training_matrix(
                 joined = joined.sampleBy(
                     "_pfx", {p: frac for p in prefixes}, seed=sample_seed
                 ).drop("_pfx")
-        pdf = joined.orderBy("doc_id").toPandas()
+        # order on the driver (the collect is budget-bounded): a Spark
+        # orderBy adds a range-partition sampling job and an exchange.
+        # Spark orders strings by UTF-8 bytes, which is Python's code
+        # point order, so the rows come out as orderBy("doc_id") would.
+        pdf = joined.toPandas().sort_values(
+            "doc_id", kind="stable", ignore_index=True
+        )
     finally:
         if cached is not None:
             cached.unpersist()

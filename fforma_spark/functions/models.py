@@ -128,7 +128,7 @@ def _forecast_batches(
         h_arr = np.asarray(kept_h, dtype=np.int64)
         offsets = np.concatenate([[0], np.cumsum(h_arr)])
         total = int(offsets[-1])
-        out_cols = {c: np.empty(total, dtype=np.float64) for c in FORECAST_COLS}
+        out_cols = {c: np.full(total, np.nan) for c in FORECAST_COLS}
         # pool the optimized-alpha golden-section across ALL fast
         # groups (one padded recurrence sweep per iteration instead of
         # one per length group — forecast_batch.optimize_alpha_ragged)
@@ -148,6 +148,11 @@ def _forecast_batches(
             idx = np.asarray(rows, dtype=np.int64)
             dest = (offsets[idx][:, None] + np.arange(h)).ravel()
             fc = forecast_group_matrix(Y, h, s, alpha_opt=al)
+            if {f"{m}_forec" for m in fc} != set(FORECAST_COLS):
+                raise ValueError(
+                    f"forecast_group_matrix models {sorted(fc)} do not "
+                    f"match FORECAST_COLS {FORECAST_COLS}"
+                )
             for m, mat in fc.items():
                 out_cols[f"{m}_forec"][dest] = mat.ravel()
         for (n, s, h, fast), rows in groups.items():

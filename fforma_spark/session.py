@@ -11,6 +11,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The driver heap is pre-touched (see get_spark), so its default must fit
+# the host: a quarter of the memory available at start, at most 16g.
+_HEAP_SHARE = 0.25
+_HEAP_MAX_GB = 16
+
+
+def default_cpus() -> int:
+    """Task slots when SPARK_GRAFT_CPUS is unset: the cores this process
+    may run on (what ``nproc`` prints)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_mem() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: a quarter of
+    /proc/meminfo MemAvailable, at least 1g and at most 16g."""
+    avail_kb = 0
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                avail_kb = int(line.split()[1])
+    gb = int(avail_kb * _HEAP_SHARE / (1024 * 1024))
+    return f"{max(1, min(_HEAP_MAX_GB, gb))}g"
+
 
 def _default_shuffle_partitions(master: str, cpus: int) -> int:
     """Match shuffle parallelism to the execution width: the local[N]
@@ -34,10 +57,11 @@ def get_spark(
 
     Under spark-submit (detected via the py4j gateway env), the
     submitted ``--master`` wins; as a plain python process ``master``
-    defaults to ``local[$SPARK_GRAFT_CPUS]`` (32). Explicit arguments
-    override both.
+    defaults to ``local[$SPARK_GRAFT_CPUS]`` (default: nproc). The
+    driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` (default:
+    ``default_driver_mem()``). Explicit arguments override both.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     # Under spark-submit the driver JVM already exists (py4j gateway
     # env vars are set) and carries the submitted --master; forcing
     # local[N] here would silently turn a cluster job into a local
@@ -47,7 +71,7 @@ def get_spark(
     if master is None and not under_submit:
         master = f"local[{cpus}]"
 
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         # Single-JVM local mode: many task threads contend on the

@@ -9,7 +9,10 @@ Stages: last-h holdout split → 13 base models per series (mapInPandas)
 → per-series sMAPE/MASE/OWA vs the Naive2 benchmark → T0 features →
 numpy-GBT meta-learner (driver; 1 row/series) → distributed weight
 scoring → weighted ensemble rollup. Writes parquet: forecasts/,
-errors/, features/, weights/, y_hat/ + one JSON metrics line.
+errors/, features/, weights/, y_hat/ + one JSON metrics line, whose
+``meta_fit_s`` is the driver-side meta-learner fit of the final model
+(seconds inside ``NumpyFFORMA.fit``; with --hpo the search's
+cross-validation fits are not included).
 """
 
 from __future__ import annotations
@@ -168,6 +171,7 @@ def main() -> None:
                     round(x, 5) for x in model.loss_curve_[:: max(1, args.rounds // 5)]
                 ],
                 "ensemble_smape": round(float(ens_smape), 4),
+                "meta_fit_s": round(model.fit_s_, 3),
                 "series_per_sec": round(n_series / max(wall, 1e-9), 1),
                 **({"hpo": hpo_info} if hpo_info else {}),
             }

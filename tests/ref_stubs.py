@@ -1,16 +1,19 @@
 """Shared installer of inert stand-ins for the reference repo's heavy
 deps (cvxpy/sklearn/scipy/statsmodels/rpy2), so its pure-numpy modules
-import in this container for parity testing."""
+import in this container for parity testing. A test that needs the
+reference skips when its checkout is absent."""
 
 from __future__ import annotations
 
+import importlib.machinery
+import importlib.util
 import sys
 import types
 
+import pytest
 
-def install_reference_stubs() -> None:
-    import importlib.machinery
 
+def _install_fakes() -> None:
     def fake_module(name, **attrs):
         m = types.ModuleType(name)
         # a real ModuleSpec so importlib.util.find_spec(name) works on
@@ -64,5 +67,14 @@ def install_reference_stubs() -> None:
         "rpy2.robjects.packages", importr=lambda name: types.SimpleNamespace()
     )
     fake_module("rpy2.robjects.vectors", IntVector=object, FloatVector=object)
+
+
+def install_reference_stubs() -> None:
+    """Make the reference's ``fforma`` package importable with inert
+    stand-ins for its heavy deps, or skip the calling test (before any
+    stand-in is installed) when the reference checkout is absent."""
     if "/root/reference" not in sys.path:
         sys.path.insert(0, "/root/reference")
+    if importlib.util.find_spec("fforma") is None:
+        pytest.skip("reference implementation (package 'fforma') not found")
+    _install_fakes()

@@ -173,6 +173,33 @@ def test_tsb_matrix_matches_scalar():
             assert np.array_equal(got[i], want), f"n={n} row={i}"
 
 
+def test_tsb_matrix_rejects_non_positive_rows():
+    Y = np.ones((3, 6))
+    Y[1, 2] = 0.0
+    with pytest.raises(ValueError, match="strictly-positive"):
+        tsb_matrix(Y, 8)
+
+
+def test_forecast_batches_reject_model_set_mismatch(monkeypatch):
+    """A batched model set that differs from FORECAST_COLS would leave
+    columns unfilled; the batch engine raises instead."""
+    import fforma_spark.functions.forecast_batch as FB
+
+    real = FB.forecast_group_matrix
+
+    def one_model_short(*args, **kwargs):
+        out = real(*args, **kwargs)
+        out.pop("tsb")
+        return out
+
+    monkeypatch.setattr(FB, "forecast_group_matrix", one_model_short)
+    pdf = pd.DataFrame(
+        {"doc_id": ["10", "11"], "tokens": [np.arange(1, 30)] * 2}
+    )
+    with pytest.raises(ValueError, match="FORECAST_COLS"):
+        next(_forecast_batches(iter([pdf]), HORIZON_BY_PREFIX, 8))
+
+
 def test_mean_axis1_pairwise_identity():
     """The bit-identity contract relies on np.mean(axis=1) over a
     C-contiguous matrix matching per-row 1-D np.mean exactly."""

@@ -7,6 +7,8 @@ from __future__ import annotations
 import subprocess
 import sys
 
+import pytest
+
 from fforma_spark.session import _default_shuffle_partitions
 
 
@@ -60,6 +62,54 @@ print("MASTER=" + captured.get("master", "ABSENT"))
             check=True,
         )
         assert want in out.stdout, (mode, out.stdout, out.stderr)
+
+
+def test_host_sized_defaults_and_overrides(monkeypatch):
+    """Without SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM the session
+    takes nproc task slots and a heap sized from MemAvailable (1g to
+    16g); set, the variables win. Checked at the builder, no JVM."""
+    import os
+
+    import fforma_spark.session as S
+
+    captured = {}
+
+    class FakeBuilder:
+        def master(self, m):
+            captured["master"] = m
+            return self
+
+        def appName(self, a):
+            return self
+
+        def config(self, k, v=None):
+            captured[k] = v
+            return self
+
+        def getOrCreate(self):
+            raise RuntimeError("builder only")
+
+    fake_session = type("S", (), {"builder": FakeBuilder()})
+    monkeypatch.setattr(S, "SparkSession", fake_session)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"):
+        monkeypatch.delenv(var, raising=False)
+
+    def build():
+        captured.clear()
+        with pytest.raises(RuntimeError, match="builder only"):
+            S.get_spark("probe")
+        return captured["master"], captured["spark.driver.memory"]
+
+    master, mem = build()
+    assert master == f"local[{len(os.sched_getaffinity(0))}]"
+    assert mem == S.default_driver_mem()
+    assert mem.endswith("g") and 1 <= int(mem[:-1]) <= 16
+    assert captured["spark.driver.extraJavaOptions"].startswith(f"-Xms{mem} ")
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert build() == ("local[3]", "2g")
 
 
 def test_shuffle_guard_never_clobbers_user_runtime_value(spark):
