@@ -39,7 +39,7 @@ def _assert_same(X, err, X_new=None, **params):
     for Xp in (X, X if X_new is None else X_new):
         assert np.array_equal(new.raw_scores(Xp), old.raw_scores(Xp))
         assert np.array_equal(new.predict_weights(Xp), old.predict_weights(Xp))
-    return new
+    return new, old
 
 
 def test_benchmark_shape_bit_identical():
@@ -47,11 +47,19 @@ def test_benchmark_shape_bit_identical():
     rng = np.random.RandomState(1)
     # unseen rows, plus rows sitting exactly on training values
     X_new = np.vstack([rng.randn(40, X.shape[1]), X[::7] + 0.0])
-    model = _assert_same(X, err, X_new, n_rounds=30, max_depth=3)
+    model, oracle = _assert_same(X, err, X_new, n_rounds=30, max_depth=3)
     # the case is not degenerate: trees split, hessians went negative
     assert any(t.feature[0] >= 0 for r in model.trees_ for t in r)
     _, hess, _ = model._grad_hess(err, np.zeros(err.shape))
     assert (hess < 0).any()
+    # rows sitting exactly on split thresholds take the same branch
+    X_thr = X[:30].copy()
+    for i, t in enumerate(t for r in model.trees_ for t in r):
+        inner = np.flatnonzero(t.feature >= 0)
+        if len(inner):
+            node = inner[i % len(inner)]
+            X_thr[i % 30, t.feature[node]] = t.threshold[node]
+    assert np.array_equal(model.raw_scores(X_thr), oracle.raw_scores(X_thr))
 
 
 @pytest.mark.parametrize("seed", [2, 3, 4])
