@@ -24,9 +24,12 @@ import subprocess
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from fforma_spark.session import default_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
 
 
 def _sf_of(path: str) -> float:
@@ -38,7 +41,6 @@ def _sf_of(path: str) -> float:
 
 
 def run_bench(master: str) -> dict:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import functions as F
 
     from fforma_spark.functions.compress import compressed_blocks

@@ -20,8 +20,12 @@ import os
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from fforma_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 
@@ -30,7 +34,6 @@ def _noop(df) -> None:
 
 
 def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import functions as F
 
     from fforma_spark.functions.compress import compressed_blocks

@@ -265,6 +265,14 @@ def tsb_matrix(Y: np.ndarray, h: int) -> np.ndarray:
     B, n = Y.shape
     b_grid = np.array([0.01, 0.02, 0.03, 0.05, 0.1, 0.2, 0.3])
     g = b_grid.size
+    # Element budget: the (B, 7, n) state is split into pods of rows
+    # under _POD_ELEMS (at least one row each). Rows never mix, so the
+    # split is invisible in the result.
+    pod = max(1, _POD_ELEMS // (g * n))
+    if B > pod:
+        return np.concatenate(
+            [tsb_matrix(Y[i : i + pod], h) for i in range(0, B, pod)]
+        )
     zfit = np.empty((B, g, n))
     zfit[:, :, 0] = Y[:, 0, None]
     for i in range(1, n):

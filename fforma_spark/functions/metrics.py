@@ -116,20 +116,25 @@ def evaluate_with_owa(
     if bench is None:
         return per_series
     bench_p = bench.removesuffix("_forec")
+    # NULL (0/0, e.g. constant series where every model is exact)
+    # mirrors the reference's NaN, handled downstream by the
+    # fillna(0) convention (fforma/experiments/base/common.py:139).
+    # One select: a withColumn per model re-analyses the plan each time.
+    owa = []
     for mc in model_cols:
         p = mc.removesuffix("_forec")
-        # NULL (0/0, e.g. constant series where every model is exact)
-        # mirrors the reference's NaN, handled downstream by the
-        # fillna(0) convention (fforma/experiments/base/common.py:139)
-        per_series = per_series.withColumn(
-            f"{p}_owa",
+        owa.append(
             (
-                F.try_divide(F.col(f"{p}_mase"), F.col(f"{bench_p}_mase"))
-                + F.try_divide(F.col(f"{p}_smape"), F.col(f"{bench_p}_smape"))
-            )
-            / 2,
+                (
+                    F.try_divide(F.col(f"{p}_mase"), F.col(f"{bench_p}_mase"))
+                    + F.try_divide(
+                        F.col(f"{p}_smape"), F.col(f"{bench_p}_smape")
+                    )
+                )
+                / 2
+            ).alias(f"{p}_owa")
         )
-    return per_series
+    return per_series.select("*", *owa)
 
 
 def group_weighted_summary(

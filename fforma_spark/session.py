@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 _HEAP_SHARE = 0.25
 _HEAP_MAX_GB = 16
 
+#: Conf every session the engine builds carries. PySpark 4 records the
+#: Python call site of each Column and DataFrame call for its error
+#: messages: a stack walk plus ~14 py4j round trips per call, and an
+#: attempted ``import IPython`` on the first one. Off, a warm FFORMA
+#: pass makes less than half the round trips and the driver never
+#: imports IPython. PySpark reads the flag once per process, on the
+#: first Column call.
+NO_CALL_SITES = {"spark.python.sql.dataFrameDebugging.enabled": "false"}
+
 
 def default_cpus() -> int:
     """Task slots when SPARK_GRAFT_CPUS is unset: the cores this process
@@ -60,6 +69,14 @@ def get_spark(
     defaults to ``local[$SPARK_GRAFT_CPUS]`` (default: nproc). The
     driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` (default:
     ``default_driver_mem()``). Explicit arguments override both.
+
+    The session records no Python call sites (:data:`NO_CALL_SITES`):
+    an error raised by a failing expression keeps its class and
+    message but no longer names the Python line that built the
+    expression. To get that line back while debugging, pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+    "true"}`` to the process's first ``get_spark`` call: the flag is a
+    static conf, and PySpark reads it once per process.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     # Under spark-submit the driver JVM already exists (py4j gateway
@@ -106,7 +123,7 @@ def get_spark(
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**NO_CALL_SITES, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if shuffle_partitions is not None:

@@ -85,6 +85,30 @@ def exact_quantile_sql(arr: str, n: str, q: float) -> str:
     return f"({lo} + ({hi} - {lo}) * ({idx} - floor({idx})))"
 
 
+def _planned_partitions(df) -> int:
+    """Partition count the physical plan fixes without running a job,
+    else 0.
+
+    Two partitionings at the top of the plan fix it, because adaptive
+    execution never coalesces them: round-robin (a ``repartition(n)``
+    that no later exchange replaced) and a single partition. Scans,
+    and hash or range exchanges that adaptive execution may coalesce,
+    read 0.
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        # its current plan: before execution, the initial plan with the
+        # exchanges that EnsureRequirements added
+        plan = plan.executedPlan()
+    part = plan.outputPartitioning()
+    if part.getClass().getSimpleName() in (
+        "RoundRobinPartitioning",
+        "SinglePartition$",
+    ):
+        return part.numPartitions()
+    return 0
+
+
 def ensure_parallelism(df, min_parts: int | None = None):
     """Repartition up when the scan produced too few splits.
 
@@ -92,11 +116,18 @@ def ensure_parallelism(df, min_parts: int | None = None):
     small parquet file arrives as ONE split and would pin the whole
     kernel stage to one core. At production scale inputs have
     thousands of splits and this is a no-op (cond false, no shuffle).
+
+    The count comes from the plan when it fixes one
+    (:func:`_planned_partitions`); only otherwise is it read from the
+    RDD, which runs the stages below a shuffle to learn how adaptive
+    execution coalesced it.
     """
     from pyspark.sql import DataFrame
 
-    assert isinstance(df, DataFrame)
+    if not isinstance(df, DataFrame):
+        raise TypeError(f"expected a DataFrame, got {type(df).__name__}")
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    n = _planned_partitions(df) or df.rdd.getNumPartitions()
+    if n < target:
         return df.repartition(target)
     return df

@@ -75,9 +75,13 @@ def main() -> None:
     from fforma_spark.plans.skew import skew_report
     from fforma_spark.sources.synth import synth_sequences
 
-    from fforma_spark.session import warm_python_workers
+    from fforma_spark.session import NO_CALL_SITES, warm_python_workers
 
-    spark = SparkSession.builder.appName("fforma_spark_build_tiers").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("fforma_spark_build_tiers")
+        .config(map=NO_CALL_SITES)
+        .getOrCreate()
+    )
     if args.store_input:
         if not args.synth:
             ap.error("--store-input requires --synth N")

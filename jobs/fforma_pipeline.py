@@ -64,10 +64,14 @@ def main() -> None:
         train_split,
     )
     from fforma_spark.operators.reshape import explode_panel
-    from fforma_spark.session import warm_python_workers
+    from fforma_spark.session import NO_CALL_SITES, warm_python_workers
     from fforma_spark.sources.synth import synth_sequences
 
-    spark = SparkSession.builder.appName("fforma_pipeline").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("fforma_pipeline")
+        .config(map=NO_CALL_SITES)
+        .getOrCreate()
+    )
     warm_python_workers(spark)
     t0 = time.time()
 

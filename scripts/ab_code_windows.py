@@ -34,6 +34,9 @@ import pyspark
 
 SUBMIT = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from fforma_spark.session import default_driver_mem  # noqa: E402
 
 
 def leg(zip_path: str, cpus: int, tag: str, seq: str, scratch: str,
@@ -42,11 +45,12 @@ def leg(zip_path: str, cpus: int, tag: str, seq: str, scratch: str,
     subprocess.run(["rm", "-rf", out], check=False)
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     cmd = [
         SUBMIT, "--master", f"local[{cpus}]",
         "--conf", f"spark.local.dir={scratch}/spark_ab",
-        "--driver-memory", "16g",
-        "--conf", ("spark.driver.extraJavaOptions=-Xms16g "
+        "--driver-memory", mem,
+        "--conf", (f"spark.driver.extraJavaOptions=-Xms{mem} "
                    "-XX:+AlwaysPreTouch -XX:+UseParallelGC"),
         "--conf", "spark.storage.memoryMapThreshold=2g",
         "--py-files", zip_path,

@@ -34,6 +34,10 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from fforma_spark.session import default_driver_mem  # noqa: E402
+
 ZIP = "/tmp/fforma_spark_bench.zip"
 
 
@@ -48,6 +52,7 @@ def _run_leg(
 ) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     cmd = [
         _submit_bin(),
         "--master",
@@ -66,10 +71,10 @@ def _run_leg(
         # without it the 32-thread leg loses ~2x to mmap_lock
         # contention, corrupting the scaling measurement.
         "--driver-memory",
-        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        mem,
         "--conf",
         "spark.driver.extraJavaOptions="
-        f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} "
+        f"-Xms{mem} "
         "-XX:+AlwaysPreTouch -XX:+UseParallelGC",
         "--conf",
         "spark.storage.memoryMapThreshold=2g",

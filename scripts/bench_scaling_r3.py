@@ -33,6 +33,10 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from fforma_spark.session import default_driver_mem  # noqa: E402
+
 ZIP = "/tmp/fforma_spark_bench.zip"
 
 
@@ -45,6 +49,7 @@ def _submit_bin() -> str:
 def _run_leg(job: str, extra: list[str], cpus: int) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     cmd = [
         _submit_bin(),
         "--master",
@@ -57,10 +62,10 @@ def _run_leg(job: str, extra: list[str], cpus: int) -> dict:
         # ~2x to mmap_lock contention and GC region churn, corrupting
         # the scaling-efficiency measurement.
         "--driver-memory",
-        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        mem,
         "--conf",
         "spark.driver.extraJavaOptions="
-        f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} "
+        f"-Xms{mem} "
         "-XX:+AlwaysPreTouch -XX:+UseParallelGC",
         "--conf",
         "spark.storage.memoryMapThreshold=2g",

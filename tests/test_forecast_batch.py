@@ -180,6 +180,41 @@ def test_tsb_matrix_rejects_non_positive_rows():
         tsb_matrix(Y, 8)
 
 
+def test_tsb_matrix_pods_match_unsplit(monkeypatch):
+    """tsb_matrix splits its (B, 7, n) state into pods of rows under
+    _POD_ELEMS, at least one row each. A whale group (two 200k-point
+    rows, each over the budget alone) and a many-row group (6000 rows,
+    nine pods) give the same bits as one unsplit pass, and the split
+    pass peaks at a few pods' worth of memory."""
+    import tracemalloc
+
+    from fforma_spark.functions import forecast_batch as fb
+
+    def run(Y, budget):
+        monkeypatch.setattr(fb, "_POD_ELEMS", budget)
+        tracemalloc.start()
+        out = fb.tsb_matrix(Y, 8)
+        peak = tracemalloc.get_traced_memory()[1]
+        tracemalloc.stop()
+        return out, peak
+
+    budget = 500_000
+    rng = np.random.default_rng(20)
+    whale = rng.integers(1, 15, size=(2, 200_000)).astype(np.float64)
+    monkeypatch.setattr(fb, "_POD_ELEMS", 2**62)
+    whole = fb.tsb_matrix(whale, 8)
+    monkeypatch.setattr(fb, "_POD_ELEMS", budget)
+    assert np.array_equal(fb.tsb_matrix(whale, 8), whole)
+
+    Y = rng.integers(1, 15, size=(6_000, 100)).astype(np.float64)
+    whole, whole_peak = run(Y, 2**62)
+    split, split_peak = run(Y, budget)
+    assert np.array_equal(split, whole)
+    assert split_peak <= 5 * 8 * budget < whole_peak, (split_peak, whole_peak)
+    for i in range(0, 6_000, 997):
+        assert np.array_equal(split[i], K.tsb(Y[i], 8)), i
+
+
 def test_forecast_batches_reject_model_set_mismatch(monkeypatch):
     """A batched model set that differs from FORECAST_COLS would leave
     columns unfilled; the batch engine raises instead."""

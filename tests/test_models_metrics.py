@@ -222,3 +222,35 @@ def test_owa_and_ensembles(spark, seq, seq_pd):
     # loser pruning returns a (possibly empty) subset
     losers = loser_model_pruning(errors.select("doc_id", *owa_cols), owa_cols)
     assert set(losers) <= set(owa_cols)
+
+
+def test_owa_columns_match_column_by_column(spark, seq):
+    """evaluate_with_owa adds the OWA columns in one select; the result
+    has the columns, order and values of adding them one withColumn at
+    a time."""
+    import pandas as pd
+
+    fc = base_forecasts(seq).cache()
+    truth = holdout_truth(seq)
+    tr_panel = explode_panel(train_split(seq)).withColumnRenamed("y", "val")
+    scale = mase_scale(tr_panel, F.lit(1))
+    got = evaluate_with_owa(
+        truth, fc, FORECAST_COLS, scale, bench="naive2_forec"
+    )
+    want = evaluate_with_owa(truth, fc, FORECAST_COLS, scale, bench=None)
+    for mc in FORECAST_COLS:
+        p = mc.removesuffix("_forec")
+        want = want.withColumn(
+            f"{p}_owa",
+            (
+                F.try_divide(F.col(f"{p}_mase"), F.col("naive2_mase"))
+                + F.try_divide(F.col(f"{p}_smape"), F.col("naive2_smape"))
+            )
+            / 2,
+        )
+    assert got.columns == want.columns
+    pd.testing.assert_frame_equal(
+        got.toPandas().sort_values("doc_id", ignore_index=True),
+        want.toPandas().sort_values("doc_id", ignore_index=True),
+        check_exact=True,
+    )

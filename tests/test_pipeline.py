@@ -768,3 +768,12 @@ def test_embedding_neardup_lsh_subset_and_recall(spark):
         for r in S.embedding_neardup_lsh(df, 0.99, 8, 8, 0).collect()
     }
     assert planted <= found, planted - found
+
+
+def test_lsh_candidate_pairs_rejects_r_not_dividing_p(spark):
+    """Band width r must split the P minhashes into whole bands."""
+    docs = load_table(spark, SF, "documents")
+    sigs = D.minhash_signatures(docs)
+    r = next(r for r in range(2, D.P + 2) if D.P % r)
+    with pytest.raises(ValueError, match="must divide"):
+        D.lsh_candidate_pairs(sigs, r=r)

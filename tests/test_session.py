@@ -4,6 +4,8 @@ to local[$SPARK_GRAFT_CPUS] for plain python processes."""
 
 from __future__ import annotations
 
+import json
+import os
 import subprocess
 import sys
 
@@ -147,3 +149,88 @@ def test_shuffle_guard_never_clobbers_user_runtime_value(spark):
     finally:
         spark.conf.set(key, saved_val)
         spark.conf.set(marker, saved_marker)
+
+
+def test_session_builds_columns_without_call_sites():
+    """A get_spark session turns off PySpark's per-call call-site
+    capture: Column and DataFrame calls leave IPython unimported (the
+    capture tries ``import IPython`` on its first call). Turned back on
+    through extra_conf, as the get_spark docstring says, the same calls
+    import it."""
+    pytest.importorskip("IPython")
+    code = """
+import sys
+from fforma_spark.session import NO_CALL_SITES, get_spark
+from pyspark.sql import functions as F
+[key] = NO_CALL_SITES
+conf = {key: sys.argv[1]} if sys.argv[1:] else None
+spark = get_spark("probe", master="local[1]", extra_conf=conf)
+df = spark.range(6).select((F.col("id") + F.lit(1)).alias("x"))
+df = df.filter(F.col("x") > 2).groupBy((F.col("x") % 2).alias("k")).count()
+print("CONF=" + spark.conf.get(key))
+print("ROWS=%d" % df.count())
+print("IPYTHON=%s" % ("IPython" in sys.modules))
+spark.stop()
+"""
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    for argv, want in (
+        ([], {"CONF=false", "ROWS=2", "IPYTHON=False"}),
+        (["true"], {"CONF=true", "ROWS=2", "IPYTHON=True"}),
+    ):
+        out = subprocess.run(
+            [sys.executable, "-c", code, *argv],
+            capture_output=True,
+            text=True,
+            env=env,
+            timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert want <= set(out.stdout.split()), (argv, out.stdout)
+
+
+@pytest.mark.parametrize(
+    "job, argv",
+    [
+        ("jobs/fforma_pipeline.py", ["--output", "unused"]),
+        ("jobs/build_tiers.py", ["--output", "unused"]),
+    ],
+)
+def test_jobs_build_sessions_without_call_sites(job, argv):
+    """The spark-submit jobs build their own session; it carries the
+    same NO_CALL_SITES conf as get_spark. Checked at the builder, no
+    JVM."""
+    code = """
+import json, runpy, sys
+import pyspark.sql
+captured = {}
+class FakeBuilder:
+    def appName(self, a): return self
+    def master(self, m): return self
+    def config(self, key=None, value=None, conf=None, *, map=None):
+        captured.update(map or {key: value}); return self
+    def getOrCreate(self): raise SystemExit(0)
+pyspark.sql.SparkSession = type("S", (), {"builder": FakeBuilder()})
+sys.argv = sys.argv[1:]
+try:
+    runpy.run_path(sys.argv[0], run_name="__main__")
+except SystemExit:
+    pass
+print("CONF=" + json.dumps(captured))
+"""
+    from fforma_spark.session import NO_CALL_SITES
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code, job, *argv],
+        capture_output=True,
+        text=True,
+        cwd=repo,
+        env={**os.environ, "PYTHONPATH": repo},
+        timeout=120,
+    )
+    line = next(
+        (ln for ln in out.stdout.splitlines() if ln.startswith("CONF=")), None
+    )
+    assert line is not None, out.stderr[-2000:]
+    captured = json.loads(line[len("CONF="):])
+    assert NO_CALL_SITES.items() <= captured.items(), captured
