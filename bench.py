@@ -364,6 +364,42 @@ def _probe() -> dict:
     }
 
 
+#: processes in the probe's widest leg (host_calibration.py runs local[8]
+#: then local[32]); PROBE_BAND was calibrated on a host with at least
+#: that many cores, and a host with fewer cannot reach it
+PROBE_PROCS = 32
+
+
+def _bench_once() -> tuple[subprocess.CompletedProcess, str | None]:
+    """Run ``bench.py --once`` in a subprocess; return it and its last
+    JSON line (None when it printed none)."""
+    repo = os.path.dirname(os.path.abspath(__file__))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py"), "--once"],
+        capture_output=True, text=True,
+    )
+    line = next(
+        (
+            ln for ln in reversed(proc.stdout.strip().splitlines())
+            if ln.startswith("{")
+        ),
+        None,
+    )
+    return proc, line
+
+
+def _forced_run() -> dict:
+    """One ungated ``--once`` run; raises if it printed no JSON line."""
+    proc, line = _bench_once()
+    if proc.returncode != 0 or line is None:
+        sys.stderr.write(proc.stderr[-4000:])
+        raise RuntimeError(
+            "bench subprocess produced no JSON line (forced run rc=%d)"
+            % proc.returncode
+        )
+    return json.loads(line)
+
+
 def run_gated() -> dict:
     """Probe-gated headline bench (VERDICT r4 #2): bracket each bench
     subprocess with the same `host_calibration.py --batched` probe the
@@ -373,9 +409,22 @@ def run_gated() -> dict:
     in a clean window, report the best-value attempt with
     ``in_band: false`` — the flags plus the per-query plan
     fingerprints make any residual drift adjudicable from the JSON
-    alone."""
+    alone.
+
+    On a host with fewer than PROBE_PROCS cores the band is out of
+    reach: the probes are skipped, the bench runs once and the gate
+    records ``skipped`` with the reason and the core count."""
+    cpus = default_cpus()
+    if cpus < PROBE_PROCS:
+        accepted = _forced_run()
+        accepted["probe_gate"] = {
+            "skipped": True,
+            "reason": f"host has {cpus} cores, the probe's widest leg "
+            f"runs {PROBE_PROCS} processes: its band is out of reach",
+            "cpus": cpus,
+        }
+        return accepted
     attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3"))
-    repo = os.path.dirname(os.path.abspath(__file__))
     tried = []
     accepted = None
     for i in range(attempts):
@@ -384,17 +433,7 @@ def run_gated() -> dict:
             tried.append({"attempt": i + 1, "pre": pre, "skipped": True})
             time.sleep(30)
             continue
-        proc = subprocess.run(
-            [sys.executable, os.path.join(repo, "bench.py"), "--once"],
-            capture_output=True, text=True,
-        )
-        line = next(
-            (
-                ln for ln in reversed(proc.stdout.strip().splitlines())
-                if ln.startswith("{")
-            ),
-            None,
-        )
+        proc, line = _bench_once()
         if proc.returncode != 0 or line is None:
             # a transiently-dead subprocess is a failed ATTEMPT, not a
             # dead bench — record it and retry; the forced fallback
@@ -424,24 +463,7 @@ def run_gated() -> dict:
         if not runs:
             # every pre-probe was out of band; run once anyway so the
             # driver always gets a bench line, flag it
-            proc = subprocess.run(
-                [sys.executable, os.path.join(repo, "bench.py"), "--once"],
-                capture_output=True, text=True,
-            )
-            line = next(
-                (
-                    ln for ln in reversed(proc.stdout.strip().splitlines())
-                    if ln.startswith("{")
-                ),
-                None,
-            )
-            if proc.returncode != 0 or line is None:
-                sys.stderr.write(proc.stderr[-4000:])
-                raise RuntimeError(
-                    "bench subprocess produced no JSON line in any "
-                    "attempt (forced run rc=%d)" % proc.returncode
-                )
-            accepted = json.loads(line)
+            accepted = _forced_run()
             tried.append({"attempt": "forced", "value": accepted["value"]})
         else:
             accepted = min(runs, key=lambda t: t["value"])["_full"]

@@ -73,8 +73,10 @@ def _write_tier(
     else:  # pragma: no cover — needs an Iceberg runtime jar
         written = df.sparkSession.read.table(target)
         nbytes = None
-    lineage_rows = (
-        written.groupBy("_pid").count().orderBy("_pid").collect()
+    # one row per partition: order on the driver, since a Spark
+    # orderBy adds a range-partition sampling job and an exchange
+    lineage_rows = sorted(
+        written.groupBy("_pid").count().collect(), key=lambda r: r["_pid"]
     )
     rows = sum(r["count"] for r in lineage_rows)
     manifest = {

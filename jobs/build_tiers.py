@@ -8,7 +8,8 @@
 Pipeline: load sequences (doc_id, tokens, n_tok, source) → skew report
 on the n_tok distribution → explode to the long panel → salted
 repartition → checkpointed tier cascade (resumes past completed tiers
-on rerun) → metrics JSON on stdout (one line, like bench.py).
+on rerun) → metrics JSON on stdout (one line, like bench.py; its
+``codegen_compiles`` counts the generated classes the JVM compiled).
 
 With --synth N the input is the deterministic generator instead of a
 table (for cluster smoke tests with no data dependency).
@@ -75,11 +76,15 @@ def main() -> None:
     from fforma_spark.plans.skew import skew_report
     from fforma_spark.sources.synth import synth_sequences
 
-    from fforma_spark.session import NO_CALL_SITES, warm_python_workers
+    from fforma_spark.session import (
+        SESSION_CONF,
+        codegen_compiles,
+        warm_python_workers,
+    )
 
     spark = (
         SparkSession.builder.appName("fforma_spark_build_tiers")
-        .config(map=NO_CALL_SITES)
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
     if args.store_input:
@@ -184,6 +189,7 @@ def main() -> None:
                     }
                     for name, m in manifests.items()
                 },
+                "codegen_compiles": codegen_compiles(spark),
                 **extra,
             }
         )

@@ -12,7 +12,9 @@ scoring → weighted ensemble rollup. Writes parquet: forecasts/,
 errors/, features/, weights/, y_hat/ + one JSON metrics line, whose
 ``meta_fit_s`` is the driver-side meta-learner fit of the final model
 (seconds inside ``NumpyFFORMA.fit``; with --hpo the search's
-cross-validation fits are not included).
+cross-validation fits are not included) and whose ``codegen_compiles``
+counts the generated classes the JVM compiled
+(``session.codegen_compiles``).
 """
 
 from __future__ import annotations
@@ -64,12 +66,16 @@ def main() -> None:
         train_split,
     )
     from fforma_spark.operators.reshape import explode_panel
-    from fforma_spark.session import NO_CALL_SITES, warm_python_workers
+    from fforma_spark.session import (
+        SESSION_CONF,
+        codegen_compiles,
+        warm_python_workers,
+    )
     from fforma_spark.sources.synth import synth_sequences
 
     spark = (
         SparkSession.builder.appName("fforma_pipeline")
-        .config(map=NO_CALL_SITES)
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
     warm_python_workers(spark)
@@ -176,6 +182,7 @@ def main() -> None:
                 ],
                 "ensemble_smape": round(float(ens_smape), 4),
                 "meta_fit_s": round(model.fit_s_, 3),
+                "codegen_compiles": codegen_compiles(spark),
                 "series_per_sec": round(n_series / max(wall, 1e-9), 1),
                 **({"hpo": hpo_info} if hpo_info else {}),
             }

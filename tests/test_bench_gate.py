@@ -6,7 +6,9 @@ Covers the two resilience contracts added in round 5:
 * a crashed calibration probe reads as an out-of-band window (never an
   exception),
 * a crashed bench subprocess burns one ATTEMPT (recorded + retried),
-  never the whole gate.
+  never the whole gate;
+and a host narrower than the probe's widest leg, where the gate skips
+the probes and runs the bench once.
 
 All subprocesses are stubbed; no Spark is started.
 """
@@ -30,6 +32,8 @@ def bench_mod(monkeypatch):
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     monkeypatch.setattr(mod.time, "sleep", lambda *_: None)
+    # a host as wide as the probe's 32-process leg, so the gate runs
+    monkeypatch.setattr(mod, "default_cpus", lambda: 32)
     return mod
 
 
@@ -115,3 +119,26 @@ def test_all_probes_dead_still_emits_one_result(bench_mod, monkeypatch):
     out = bench_mod.run_gated()
     assert out["value"] == good["value"]
     assert out["probe_gate"]["in_band"] is False
+
+
+def test_narrow_host_skips_probes_and_runs_once(bench_mod, monkeypatch):
+    """On a host with fewer cores than the probe's 32-process leg the
+    band is out of reach: no probe runs, the bench runs exactly once
+    and the gate records the skip with the core count."""
+    good = {"metric": "wall", "value": 4.2, "unit": "sec"}
+    calls = {"bench": 0}
+
+    def fake_run(cmd, **kw):
+        if "host_calibration.py" in " ".join(cmd):
+            raise AssertionError("probe must not run on a narrow host")
+        calls["bench"] += 1
+        return _fake_proc(stdout=json.dumps(good) + "\n")
+
+    monkeypatch.setattr(bench_mod, "default_cpus", lambda: 4)
+    monkeypatch.setattr(bench_mod.subprocess, "run", fake_run)
+    out = bench_mod.run_gated()
+    assert out["value"] == good["value"]
+    assert calls["bench"] == 1
+    gate = out["probe_gate"]
+    assert gate["skipped"] is True and gate["cpus"] == 4
+    assert gate["reason"]

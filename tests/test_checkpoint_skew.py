@@ -81,6 +81,30 @@ def test_materialize_and_resume(spark, panel, tmp_path):
     )
 
 
+def test_lineage_partitions_match_spark_order(spark, panel, tmp_path):
+    """The manifest's per-partition lineage is sorted on the driver; it
+    must list what a Spark ``orderBy("_pid")`` over the written tier
+    lists, on a tier written as several partitions."""
+    base = str(tmp_path / "tiers")
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")  # keep every shuffle partition
+    try:
+        m = materialize_ladder(panel, base, TIERS[:1], fingerprint="fp1")
+    finally:
+        spark.conf.set(coalesce, saved)
+    want = [
+        {"partition_id": r["_pid"], "rows": r["count"]}
+        for r in spark.read.parquet(os.path.join(base, "t1", "data"))
+        .groupBy("_pid")
+        .count()
+        .orderBy("_pid")
+        .collect()
+    ]
+    assert len(want) > 1
+    assert m["t1"]["partitions"] == want
+
+
 def test_skew_report_and_whales(spark):
     seq = synth_sequences(spark, n_docs=120, seed=42)
     rep = skew_report(seq)

@@ -188,6 +188,46 @@ spark.stop()
         assert want <= set(out.stdout.split()), (argv, out.stdout)
 
 
+def test_session_codegen_cache_holds_warm_working_set():
+    """A get_spark session keeps compiled codegen classes across passes
+    whose working set exceeds Spark's stock 100-entry cache: a union of
+    150 distinct projections compiles its classes on the first collect
+    and none on the second. With the stock cache LRU evicts each class
+    before its next use, and every collect compiles them all again."""
+    code = """
+import functools
+from fforma_spark.session import CODEGEN_CACHE, codegen_compiles, get_spark
+spark = get_spark("probe", master="local[1]")
+[(key, size)] = CODEGEN_CACHE.items()
+parts = [
+    spark.range(2).selectExpr(f"id * {i + 2} + {i} AS x") for i in range(150)
+]
+df = functools.reduce(lambda a, b: a.unionAll(b), parts)
+for r in range(2):
+    before = codegen_compiles(spark)
+    rows = len(df.collect())
+    print("PASS%d=%d,%d" % (r, rows, codegen_compiles(spark) - before))
+print("CONF=" + str(spark.conf.get(key) == size))
+spark.stop()
+"""
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = dict(
+        ln.split("=", 1) for ln in out.stdout.split() if "=" in ln
+    )
+    assert got["CONF"] == "True", out.stdout
+    rows, first = map(int, got["PASS0"].split(","))
+    assert rows == 300 and first >= 150, out.stdout
+    assert got["PASS1"] == "300,0", out.stdout
+
+
 @pytest.mark.parametrize(
     "job, argv",
     [
@@ -197,8 +237,8 @@ spark.stop()
 )
 def test_jobs_build_sessions_without_call_sites(job, argv):
     """The spark-submit jobs build their own session; it carries the
-    same NO_CALL_SITES conf as get_spark. Checked at the builder, no
-    JVM."""
+    same conf as get_spark: NO_CALL_SITES and the rest of
+    SESSION_CONF. Checked at the builder, no JVM."""
     code = """
 import json, runpy, sys
 import pyspark.sql
@@ -217,7 +257,7 @@ except SystemExit:
     pass
 print("CONF=" + json.dumps(captured))
 """
-    from fforma_spark.session import NO_CALL_SITES
+    from fforma_spark.session import NO_CALL_SITES, SESSION_CONF
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
@@ -234,3 +274,4 @@ print("CONF=" + json.dumps(captured))
     assert line is not None, out.stderr[-2000:]
     captured = json.loads(line[len("CONF="):])
     assert NO_CALL_SITES.items() <= captured.items(), captured
+    assert SESSION_CONF.items() <= captured.items(), captured
