@@ -11,9 +11,12 @@ Output long panel: (doc_id, pos, <model>_forec ...) where pos counts
 horizon steps 0..h-1 after the train cutoff — mirrors preds_df
 (fforma/base/trainer.py:120-146, fforma/experiments/base/common.py:194-211).
 
-The pure-SQL members (naive/snaive/rw_drift/average/smavg) also have a
-Catalyst-only implementation + DuckDB oracle in
-fforma_spark.queries (forecast_sql_*), proving the closed forms.
+The closed-form members (naive/snaive/rw_drift/average) are checked
+against DuckDB oracles in fforma_spark.queries: base_forecasts_closed_form
+oracles this fabric's own output, and forecasts_sql_events computes the
+same closed forms Catalyst-only through
+fforma_spark.plans.backtest.closed_form_stats / closed_form_forecasts,
+the one implementation the rolling ensemble backtest also uses.
 """
 
 from __future__ import annotations

@@ -33,16 +33,26 @@ from fforma_spark.util import sql_round6, stable_round6
 MODELS = ("naive", "snaive", "rwd", "avg")
 
 
-def _train_stats(panel: DataFrame, cuts: DataFrame, h: int, s: int) -> DataFrame:
-    """Per (doc_id, cutoff): closed-form train stats, only where the
-    doc has a full horizon after the cutoff and > s train points."""
+def cutoff_keys(panel: DataFrame, cutoffs: list[int], h: int) -> DataFrame:
+    """(doc_id, cutoff) for every doc with a full horizon after the
+    cutoff: per-doc max(pos) crossed with a broadcast cutoffs dim."""
+    cuts = panel.sparkSession.createDataFrame(
+        [(c,) for c in cutoffs], "cutoff int"
+    )
     mx = panel.groupBy("doc_id").agg(F.max("pos").alias("mx"))
-    ok = (
+    return (
         mx.crossJoin(F.broadcast(cuts))
         .filter(F.col("mx") >= F.col("cutoff") + h - 1)
         .select("doc_id", "cutoff")
     )
-    train = panel.join(ok, "doc_id").filter(F.col("pos") < F.col("cutoff"))
+
+
+def closed_form_stats(train: DataFrame, s: int) -> DataFrame:
+    """Per (doc_id, cutoff) of a train split (doc_id, cutoff, pos, val)
+    whose positions run 0..cutoff−1: the scalars the closed-form models
+    read, only where the split has > s points. ``tail`` holds the last
+    s train values, oldest first."""
+    back = F.col("cutoff") - F.col("pos")  # 1 at the last train point
     return (
         train.groupBy("doc_id", "cutoff")
         .agg(
@@ -53,45 +63,34 @@ def _train_stats(panel: DataFrame, cuts: DataFrame, h: int, s: int) -> DataFrame
             ).alias("avg_f"),
             F.max_by("val", "pos").alias("last_v"),
             F.min_by("val", "pos").alias("first_v"),
+            F.array(
+                *[F.max(F.when(back == s - k, F.col("val"))) for k in range(s)]
+            ).alias("tail"),
         )
         .filter(F.col("n_train") > s)
     )
 
 
-def _forecasts(panel: DataFrame, stats: DataFrame, h: int, s: int) -> DataFrame:
-    """(doc_id, cutoff, pos 0..h−1, <model>_f) — same closed forms as
+def closed_form_forecasts(stats: DataFrame, h: int) -> DataFrame:
+    """(doc_id, cutoff, pos 0..h−1, <model>_f) from
+    :func:`closed_form_stats` — the closed forms of
     fforma/base/_models.py:224-419, per cutoff."""
     grid = stats.select(
+        "*", F.explode(F.sequence(F.lit(0), F.lit(h - 1))).alias("pos")
+    )
+    return grid.select(
         "doc_id",
         "cutoff",
-        "n_train",
+        "pos",
+        F.col("last_v").alias("naive_f"),
+        F.col("tail")[F.col("pos") % F.size("tail")].alias("snaive_f"),
+        (
+            F.col("last_v")
+            + (F.col("last_v") - F.col("first_v"))
+            / (F.col("n_train") - 1)
+            * (F.col("pos") + 1)
+        ).alias("rwd_f"),
         "avg_f",
-        "last_v",
-        "first_v",
-        F.explode(F.sequence(F.lit(0), F.lit(h - 1))).alias("pos"),
-    )
-    tail = panel.select(
-        "doc_id", F.col("pos").alias("_tpos"), F.col("val").alias("_tval")
-    )
-    return (
-        grid.withColumn(
-            "_tpos", F.col("cutoff") - s + F.pmod("pos", F.lit(s))
-        )
-        .join(tail, ["doc_id", "_tpos"])
-        .select(
-            "doc_id",
-            "cutoff",
-            "pos",
-            F.col("last_v").alias("naive_f"),
-            F.col("_tval").alias("snaive_f"),
-            (
-                F.col("last_v")
-                + (F.col("last_v") - F.col("first_v"))
-                / (F.col("n_train") - 1)
-                * (F.col("pos") + 1)
-            ).alias("rwd_f"),
-            F.col("avg_f").alias("avg_f"),
-        )
     )
 
 
@@ -150,9 +149,11 @@ def ensemble_backtest(
     one row per test cutoff: (cutoff, n_docs, softmin_smape,
     naive_smape)."""
     spark = panel.sparkSession
-    cuts = spark.createDataFrame([(c,) for c in cutoffs], "cutoff int")
-    stats = _train_stats(panel, cuts, h, s)
-    fc = _forecasts(panel, stats, h, s)
+    train = panel.join(cutoff_keys(panel, cutoffs, h), "doc_id").filter(
+        F.col("pos") < F.col("cutoff")
+    )
+    stats = closed_form_stats(train, s)
+    fc = closed_form_forecasts(stats, h)
     truth = _truth(panel, stats, h)
     err = _errors(fc, truth)
     w = _softmin(err)

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from fforma_spark.operators.gapfill import locf_fill, locf_fill_sql
 from fforma_spark.operators.reshape import explode_panel
@@ -22,6 +22,14 @@ from fforma_spark.operators.rollup import (
     rollup_from_tier,
     rollup_tier,
     rollup_tier_sql,
+)
+from fforma_spark.plans.backtest import (
+    MODELS,
+    closed_form_forecasts,
+    closed_form_stats,
+    cutoff_keys,
+    ensemble_backtest,
+    ensemble_backtest_sql,
 )
 from fforma_spark.sources.tables import (
     PANEL_FROM_EVENTS_SQL,
@@ -53,9 +61,7 @@ def register(name: str, oracle: str | None = None):
 
 
 def _round6(df: DataFrame, cols: list[str]) -> DataFrame:
-    for c in cols:
-        df = df.withColumn(c, stable_round6(c))
-    return df
+    return df.withColumns({c: stable_round6(c) for c in cols})
 
 
 def _sql_rounded(inner_sql: str, round_cols: list[str], keep_cols: list[str]) -> str:
@@ -291,61 +297,40 @@ _SQL_FC = f"""
 """
 
 
-def _forecasts_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalyst-only Naive/SeasonalNaive/RandomWalkDrift/Average
-    (fforma/base/_models.py:224-440) over the events-derived panel.
+def _events_split(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The holdout lineage every closed-form events query shares, from
+    ONE panel_from_events: each doc's cutoff is max(pos)+1−_H from a
+    per-doc window, kept where > _S.
 
-    Plan shape: one agg on doc_id, one small grid explode, one
-    (doc_id,pos) equi-join for the seasonal tail — all broadcast-able
-    per-doc scalars; no UDFs.
-    """
+    Returns (train, truth, fc): train (doc_id, pos, val, cutoff) before
+    the cutoff; truth (doc_id, pos, y) with pos counted from the
+    cutoff; fc (doc_id, pos, <model>_forec) — Naive/SeasonalNaive/
+    RandomWalkDrift/Average (fforma/base/_models.py:224-440) rounded to
+    6dp. Catalyst only, no UDFs."""
     panel = panel_from_events(spark, sf_dir)
-    stats = (
-        panel.groupBy("doc_id")
-        .agg((F.max("pos") + 1).alias("n"))
-        .filter(F.col("n") > _H + _S)
-        .withColumn("cutoff", F.col("n") - _H)
-    )
-    train = panel.join(stats.select("doc_id", "cutoff"), "doc_id").filter(
-        F.col("pos") < F.col("cutoff")
-    )
-    agg = train.groupBy("doc_id").agg(
-        (
-            F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("avg_f"),
-        F.max_by("val", "pos").alias("last_v"),
-        F.min_by("val", "pos").alias("first_v"),
-        F.count("*").alias("n_train"),
-    )
-    grid = stats.select(
+    cut = panel.withColumn(
+        "cutoff", F.max("pos").over(Window.partitionBy("doc_id")) + 1 - _H
+    ).filter(F.col("cutoff") > _S)
+    train = cut.filter(F.col("pos") < F.col("cutoff"))
+    truth = cut.filter(F.col("pos") >= F.col("cutoff")).select(
         "doc_id",
-        "cutoff",
-        F.explode(F.sequence(F.lit(0), F.lit(_H - 1))).alias("pos"),
+        (F.col("pos") - F.col("cutoff")).alias("pos"),
+        F.col("val").alias("y"),
     )
-    tail = train.select(
-        "doc_id", F.col("pos").alias("_tpos"), F.col("val").alias("_tval")
+    fc = closed_form_forecasts(closed_form_stats(train, _S), _H).select(
+        "doc_id",
+        F.col("pos").cast("long").alias("pos"),
+        *[stable_round6(f"{m}_f").alias(f"{m}_forec") for m in MODELS],
     )
-    return (
-        grid.join(agg, "doc_id")
-        .withColumn("_tpos", F.col("cutoff") - _S + F.pmod("pos", F.lit(_S)))
-        .join(tail, ["doc_id", "_tpos"])
-        .select(
-            "doc_id",
-            F.col("pos").cast("long").alias("pos"),
-            stable_round6("last_v").alias("naive_forec"),
-            stable_round6("_tval").alias("snaive_forec"),
-            stable_round6(
-                F.col("last_v")
-                + (F.col("last_v") - F.col("first_v"))
-                / (F.col("n_train") - 1)
-                * (F.col("pos") + 1)).alias("rwd_forec"),
-            stable_round6("avg_f").alias("avg_forec"),
-        )
-    )
+    return train, truth, fc
 
 
-register("forecasts_sql_events", _SQL_FC)(_forecasts_events_spark)
+@register("forecasts_sql_events", _SQL_FC)
+def forecasts_sql_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The closed-form forecast panel of the events holdout split."""
+    return _events_split(spark, sf_dir)[2]
 
 
 _SQL_EVAL = f"""
@@ -383,33 +368,14 @@ _SQL_EVAL = f"""
 """
 
 
-def _eval_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _eval_events(
+    train: DataFrame, truth: DataFrame, fc: DataFrame
+) -> DataFrame:
     """Per-series sMAPE (masked-invalid, metrics.py:117-148) and MASE
     (:150-180) of the closed-form models, Catalyst aggregates only."""
     from fforma_spark.functions.metrics import mase_scale
 
-    panel = panel_from_events(spark, sf_dir)
-    stats = (
-        panel.groupBy("doc_id")
-        .agg((F.max("pos") + 1).alias("n"))
-        .filter(F.col("n") > _H + _S)
-        .withColumn("cutoff", F.col("n") - _H)
-    )
-    truth = (
-        panel.join(stats.select("doc_id", "cutoff"), "doc_id")
-        .filter(F.col("pos") >= F.col("cutoff"))
-        .select(
-            "doc_id", (F.col("pos") - F.col("cutoff")).alias("pos"),
-            F.col("val").alias("y"),
-        )
-    )
-    train_panel = panel.join(stats.select("doc_id", "cutoff"), "doc_id").filter(
-        F.col("pos") < F.col("cutoff")
-    )
-    scale = mase_scale(
-        train_panel.select("doc_id", "pos", "val"), F.lit(_S)
-    )
-    fc = _forecasts_events_spark(spark, sf_dir)
+    scale = mase_scale(train.select("doc_id", "pos", "val"), F.lit(_S))
     joined = truth.join(fc, ["doc_id", "pos"]).join(scale, "doc_id")
     aggs = []
     for m in ["naive", "snaive"]:
@@ -427,10 +393,12 @@ def _eval_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("doc_id").agg(*aggs)
 
 
-register("eval_metrics_events", _SQL_EVAL)(_eval_events_spark)
+@register("eval_metrics_events", _SQL_EVAL)
+def eval_metrics_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _eval_events(*_events_split(spark, sf_dir))
 
 
-_FC4 = ["naive_forec", "snaive_forec", "rwd_forec", "avg_forec"]
+_FC4 = [f"{m}_forec" for m in MODELS]
 
 
 @register(
@@ -467,12 +435,12 @@ def ensembles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction panel."""
     from fforma_spark.functions.ensemble import softmin_weights, weighted_rollup
 
-    ev = _eval_events_spark(spark, sf_dir)
+    train, truth, fc = _events_split(spark, sf_dir)
+    ev = _eval_events(train, truth, fc)
     w = softmin_weights(
         ev.select("doc_id", "naive_smape", "snaive_smape"),
         ["naive_smape", "snaive_smape"],
     )
-    fc = _forecasts_events_spark(spark, sf_dir)
     soft = weighted_rollup(
         fc,
         w,
@@ -774,7 +742,7 @@ def bestmodel_wins_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-series argmin-loss winner histogram — the loser-pruning
     input (fforma/fforma_python_futuro.py:193-195,
     fforma/meta_learner/_XGBoost.py:106-108)."""
-    ev = _eval_events_spark(spark, sf_dir)
+    ev = _eval_events(*_events_split(spark, sf_dir))
     return (
         ev.select(
             F.when(
@@ -1253,25 +1221,7 @@ def quantile_eval_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-sample seasonal-naive MSE), quantile calibration (:272-296:
     fraction of obs with y ≤ ŷ), and the scaled weighted pinball
     (:298-327: 2·Σpinball/Σ|y|). Catalyst aggregates only."""
-    panel = panel_from_events(spark, sf_dir)
-    stats = (
-        panel.groupBy("doc_id")
-        .agg((F.max("pos") + 1).alias("n"))
-        .filter(F.col("n") > _H + _S)
-        .withColumn("cutoff", F.col("n") - _H)
-    )
-    truth = (
-        panel.join(stats.select("doc_id", "cutoff"), "doc_id")
-        .filter(F.col("pos") >= F.col("cutoff"))
-        .select(
-            "doc_id",
-            (F.col("pos") - F.col("cutoff")).alias("pos"),
-            F.col("val").alias("y"),
-        )
-    )
-    train = panel.join(stats.select("doc_id", "cutoff"), "doc_id").filter(
-        F.col("pos") < F.col("cutoff")
-    )
+    train, truth, fc = _events_split(spark, sf_dir)
     shifted = train.select(
         "doc_id", (F.col("pos") + _S).alias("pos"), F.col("val").alias("_pv")
     )
@@ -1280,7 +1230,6 @@ def quantile_eval_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.avg(F.pow(F.col("val") - F.col("_pv"), 2)).alias("mse_scale"))
     )
-    fc = _forecasts_events_spark(spark, sf_dir)
     j = truth.join(fc, ["doc_id", "pos"]).join(scale2, "doc_id")
     e = F.col("y") - F.col("naive_forec")
     pinball = F.avg(
@@ -1377,11 +1326,7 @@ def rolling_backtest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     forecast → sMAPE over [cutoff, cutoff+h). The cutoff loop is a
     cutoffs-dim crossjoin, not a driver loop — one Spark job."""
     panel = panel_from_events(spark, sf_dir)
-    cuts = spark.createDataFrame([(c,) for c in _BT_CUTS], "cutoff int")
-    mx = panel.groupBy("doc_id").agg(F.max("pos").alias("mx"))
-    ok = mx.crossJoin(F.broadcast(cuts)).filter(
-        F.col("mx") >= F.col("cutoff") + _H - 1
-    ).select("doc_id", "cutoff")
+    ok = cutoff_keys(panel, _BT_CUTS, _H)
     last_train = ok.join(
         panel,
         (panel["doc_id"] == ok["doc_id"]) & (panel["pos"] == ok["cutoff"] - 1),
@@ -1447,33 +1392,8 @@ def pooled_eval_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     then-mean. Single global aggregate."""
     from fforma_spark.functions.metrics import evaluate_models_per_obs
 
-    fc = _forecasts_events_spark(spark, sf_dir).select(
-        "doc_id",
-        "pos",
-        F.col("naive_forec"),
-        F.col("snaive_forec"),
-        F.col("rwd_forec").alias("rwd_forec"),
-        F.col("avg_forec").alias("avg_forec"),
-    )
-    panel = panel_from_events(spark, sf_dir)
-    stats = (
-        panel.groupBy("doc_id")
-        .agg((F.max("pos") + 1).alias("n"))
-        .filter(F.col("n") > _H + _S)
-        .withColumn("cutoff", F.col("n") - _H)
-    )
-    truth = (
-        panel.join(stats.select("doc_id", "cutoff"), "doc_id")
-        .filter(F.col("pos") >= F.col("cutoff"))
-        .select(
-            "doc_id",
-            (F.col("pos") - F.col("cutoff")).alias("pos"),
-            F.col("val").alias("y"),
-        )
-    )
-    out = evaluate_models_per_obs(
-        truth, fc, ["naive_forec", "snaive_forec", "rwd_forec", "avg_forec"]
-    )
+    _, truth, fc = _events_split(spark, sf_dir)
+    out = evaluate_models_per_obs(truth, fc, _FC4)
     return out.select(
         *[stable_round6(c).alias(c) for c in out.columns]
     )
@@ -1510,7 +1430,7 @@ def weighted_summary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic stand-in for the reference's frequency groups."""
     from fforma_spark.functions.metrics import group_weighted_summary
 
-    ev = _eval_events_spark(spark, sf_dir).withColumn(
+    ev = _eval_events(*_events_split(spark, sf_dir)).withColumn(
         "grp", (F.col("doc_id").cast("long") % 3).cast("string")
     )
     out = group_weighted_summary(
@@ -1579,11 +1499,6 @@ def seasonal_onehot_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EBT_CUTS = [30, 36, 42, 48, 54, 60]
 _EBT_H, _EBT_S = 6, 7
-
-from fforma_spark.plans.backtest import (  # noqa: E402
-    ensemble_backtest,
-    ensemble_backtest_sql,
-)
 
 
 @register(
