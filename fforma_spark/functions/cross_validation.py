@@ -6,11 +6,10 @@ shuffled with a fixed seed — scoring each Optuna trial by the mean
 held-out weighted loss; plus the deterministic grid harness
 (fforma/experiments/experiment.py:356-393: itertools.product over the
 spec dict, seed-1 shuffled). This module carries the exhaustive grid
-and successive-halving searches; the reference's adaptive flow —
-TPESampler + MedianPruner — is implemented from scratch in
-fforma_spark/functions/hpo.py (no optuna in this container; the
-SEARCH SPACE + CV scoring semantics here are the ported contract,
-shared by all three searchers).
+search; the reference's adaptive flow — TPESampler + MedianPruner —
+is implemented from scratch in fforma_spark/functions/hpo.py (no
+optuna dependency; the SEARCH SPACE + CV scoring semantics here are
+the ported contract, shared by both searchers).
 
 Spark shape: model selection operates on the 1-row-per-series matrix,
 collected ONCE through the same budget-capped path as training
@@ -30,7 +29,6 @@ import numpy as np
 from fforma_spark.functions.meta_learner import (
     NumpyFFORMA,
     collect_training_matrix,
-    softmax,
 )
 
 
@@ -146,105 +144,3 @@ def cross_validate_fforma(
         )
     model = NumpyFFORMA(**best_params).fit(X, err)
     return best_params, best_loss, trials, model, kept, feature_cols
-
-
-def _fold_loss(
-    X: np.ndarray,
-    err: np.ndarray,
-    train_idx: np.ndarray,
-    test_idx: np.ndarray,
-    params: dict,
-) -> float:
-    model = NumpyFFORMA(**params).fit(X[train_idx], err[train_idx])
-    w = model.predict_weights(X[test_idx])
-    return float((w * err[test_idx]).sum(axis=1).mean())
-
-
-def successive_halving_fforma(
-    features_df,
-    errors_df,
-    loss_cols: list[str],
-    benchmark: str,
-    spec: dict[str, list] | None = None,
-    n_splits: int = 3,
-    seed: int = 1,
-    keep_frac: float = 0.25,
-    rung0_budget_frac: float = 0.25,
-    train_row_budget: int | None = 2_000_000,
-):
-    """Adaptive HPO: successive halving over the same grid + CV
-    objective as :func:`cross_validate_fforma` — the pruning behavior
-    of the reference's Optuna MedianPruner
-    (fforma/experiments/cross_validation/common.py:88-112: trials whose
-    intermediate loss falls below the running median are stopped early)
-    re-expressed without optuna:
-
-    * rung 0 — every grid point runs CHEAP: one fold, n_rounds scaled
-      by ``rung0_budget_frac`` (the budget dimension the MedianPruner
-      prunes mid-training);
-    * rung 1 — the top ``keep_frac`` survivors by rung-0 loss get the
-      full all-folds CV at full n_rounds.
-
-    Returns (best_params, best_loss, trials, model, kept, feature_cols,
-    cost) where ``cost`` reports full-budget-equivalent fold
-    evaluations spent vs what the exhaustive grid would spend —
-    cost['ratio'] < 0.4 for the default knobs."""
-    if spec is None:
-        spec = {
-            "learning_rate": [0.05, 0.1, 0.3],
-            "max_depth": [3, 4],
-            "n_rounds": [20, 50],
-        }
-    X, err, kept, feature_cols, doc_ids = collect_training_matrix(
-        features_df,
-        errors_df,
-        loss_cols,
-        benchmark,
-        None,
-        train_row_budget,
-        seed,
-    )
-    classes = np.array([str(d)[:1] for d in doc_ids])
-    grid = param_grid(spec)
-    folds = [
-        (tr, te)
-        for tr, te in stratified_kfold(classes, n_splits, seed)
-        if len(tr) and len(te)
-    ]
-    if not folds:
-        raise ValueError(
-            f"no usable CV folds: {len(X)} rows cannot fill "
-            f"{n_splits} stratified splits"
-        )
-    # rung 0: one fold, shrunk boosting budget
-    tr0, te0 = folds[0]
-    rung0 = []
-    for params in grid:
-        cheap = dict(params)
-        if "n_rounds" in cheap:
-            cheap["n_rounds"] = max(1, int(cheap["n_rounds"] * rung0_budget_frac))
-        rung0.append((params, _fold_loss(X, err, tr0, te0, cheap)))
-    rung0.sort(key=lambda t: (not np.isfinite(t[1]), t[1]))
-    n_keep = max(1, int(np.ceil(len(grid) * keep_frac)))
-    survivors = [p for p, _ in rung0[:n_keep]]
-    # rung 1: full CV on the survivors
-    trials = []
-    best_params, best_loss = None, np.inf
-    for params in survivors:
-        losses = [_fold_loss(X, err, tr, te, params) for tr, te in folds]
-        loss = float(np.mean(losses))
-        trials.append((params, loss))
-        if np.isfinite(loss) and loss < best_loss:
-            best_params, best_loss = params, loss
-    if best_params is None:
-        raise ValueError("no survivor produced a finite CV loss")
-    spent = len(grid) * rung0_budget_frac + n_keep * len(folds)
-    full = len(grid) * len(folds)
-    cost = {
-        "fold_evals_spent": spent,
-        "fold_evals_full_grid": full,
-        "ratio": spent / full,
-        "rung0": rung0,
-    }
-    model = NumpyFFORMA(**best_params).fit(X, err)
-    return best_params, best_loss, trials, model, kept, feature_cols, cost

@@ -1,6 +1,8 @@
 """Length-batched twins of the per-series forecast models.
 
-`models._forecast_batches` used to loop docs in Python, and the
+Callers reach these kernels only through :func:`models.forecast_columns`,
+the one forecast dispatch (base forecasts and regression averaging
+alike). `models._forecast_batches` used to loop docs in Python, and the
 optimized-alpha SES models (croston_opt / adida / imapa, via
 ``optimize_alpha``'s golden-section over a pure-Python ``ses_run``
 recurrence) dominated the whole ensemble_rollup bench query (~5 ms per
@@ -28,8 +30,9 @@ equality vs :func:`models.forecast_series` per doc):
   dataset: digit doc prefixes) the indices are exactly ones(1) and the
   whole model stays batched.
 
-Docs whose train series contains a non-positive value fall back to the
-scalar :func:`models.forecast_series` — the intermittent-demand models
+Docs whose train series contains a non-positive value fall back, inside
+:func:`models.forecast_columns`, to the scalar
+:func:`models.forecast_series` — the intermittent-demand models
 (croston/tsb/adida/imapa) become ragged across docs there (per-doc
 demand/interval lengths), and the fallback is the very code the batch
 path is pinned against.

@@ -11,6 +11,12 @@ Output long panel: (doc_id, pos, <model>_forec ...) where pos counts
 horizon steps 0..h-1 after the train cutoff — mirrors preds_df
 (fforma/base/trainer.py:120-146, fforma/experiments/base/common.py:194-211).
 
+:func:`forecast_columns` is the one forecast dispatch: every consumer of
+base forecasts (this fabric, and the regression-averaging pass in
+regression_averaging.py) hands it a batch of train series, and it alone
+chooses between the batched kernels (forecast_batch.py) and the scalar
+oracle :func:`forecast_series`.
+
 The closed-form members (naive/snaive/rw_drift/average) are checked
 against DuckDB oracles in fforma_spark.queries: base_forecasts_closed_form
 oracles this fabric's own output, and forecasts_sql_events computes the
@@ -88,92 +94,102 @@ def _split(tokens: np.ndarray, h: int) -> tuple[np.ndarray, np.ndarray]:
     return y[:-h], y[-h:]
 
 
+def forecast_columns(
+    trains: list[np.ndarray], hs: list[int], ss: list[int]
+) -> dict[str, np.ndarray]:
+    """All model forecasts for many train series: FORECAST_COL -> one
+    flat float64 array holding row k's ``hs[k]`` forecasts at offset
+    ``sum(hs[:k])``.
+
+    The one place production code chooses between the batched kernels
+    and the scalar oracle. Rows are grouped by (train-length,
+    seasonality, horizon, all-positive); every all-positive group runs
+    through the vectorized :func:`forecast_batch.forecast_group_matrix`
+    with its optimal SES alphas taken from ONE pooled
+    :func:`forecast_batch.optimize_alpha_ragged` sweep — bit-identical
+    to :func:`forecast_series` per row (pinned by
+    tests/test_forecast_batch.py). Rows whose train series contains a
+    non-positive value keep the per-row scalar :func:`forecast_series`
+    (ragged intermittent-demand shapes)."""
+    from fforma_spark.functions.forecast_batch import (
+        forecast_group_matrix,
+        optimize_alpha_ragged,
+    )
+
+    h_arr = np.asarray(hs, dtype=np.int64)
+    offsets = np.concatenate([[0], np.cumsum(h_arr)])
+    out_cols = {c: np.full(int(offsets[-1]), np.nan) for c in FORECAST_COLS}
+    groups: dict[tuple[int, int, int, bool], list[int]] = {}
+    for k, (train, h, s) in enumerate(zip(trains, hs, ss)):
+        fast = bool(np.all(train > 0))
+        groups.setdefault((len(train), s, h, fast), []).append(k)
+    fast_items = [
+        (key, rows, np.stack([trains[k] for k in rows]))
+        for key, rows in groups.items()
+        if key[3]
+    ]
+    alphas = (
+        optimize_alpha_ragged([Y for _, _, Y in fast_items])
+        if fast_items
+        else []
+    )
+    for ((_n, s, h, _fast), rows, Y), al in zip(fast_items, alphas):
+        idx = np.asarray(rows, dtype=np.int64)
+        dest = (offsets[idx][:, None] + np.arange(h)).ravel()
+        fc = forecast_group_matrix(Y, h, s, alpha_opt=al)
+        if {f"{m}_forec" for m in fc} != set(FORECAST_COLS):
+            raise ValueError(
+                f"forecast_group_matrix models {sorted(fc)} do not "
+                f"match FORECAST_COLS {FORECAST_COLS}"
+            )
+        for m, mat in fc.items():
+            out_cols[f"{m}_forec"][dest] = mat.ravel()
+    for (_n, s, h, fast), rows in groups.items():
+        if fast:
+            continue  # handled above
+        for k in rows:  # scalar fallback: non-positive values present
+            fc1 = forecast_series(trains[k], h, s)
+            lo = int(offsets[k])
+            for c in FORECAST_COLS:
+                out_cols[c][lo : lo + h] = fc1[c]
+    return out_cols
+
+
 def _forecast_batches(
     it: Iterator[pd.DataFrame], h_by_prefix: dict[str, int], default_h: int
 ) -> Iterator[pd.DataFrame]:
-    """Batch engine for :func:`base_forecasts`.
-
-    Docs are grouped by (train-length, seasonality, horizon) and each
-    group runs through the vectorized
-    :func:`forecast_batch.forecast_group_matrix` — bit-identical to the
-    original per-doc :func:`forecast_series` loop (pinned by
-    tests/test_forecast_batch.py) and ~100x cheaper on the
-    optimized-alpha models. Docs whose train series contains a
-    non-positive value keep the per-doc scalar path (ragged
-    intermittent-demand shapes). Row order (doc order as received, pos
-    ascending within doc) is preserved exactly.
-    """
-    from fforma_spark.functions.forecast_batch import forecast_group_matrix
-
+    """Batch engine for :func:`base_forecasts`: each Arrow batch's
+    train splits go through ONE :func:`forecast_columns` call. Row
+    order (doc order as received, pos ascending within doc) is
+    preserved exactly."""
     cols = ["doc_id", "pos", *FORECAST_COLS]
     for pdf in it:
         kept_ids: list = []
-        kept_train: list[np.ndarray] = []
-        kept_h: list[int] = []
-        groups: dict[tuple[int, int, int, bool], list[int]] = {}
+        trains: list[np.ndarray] = []
+        hs: list[int] = []
+        ss: list[int] = []
         for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
             pfx = str(doc_id)[:1]
-            s = SEASONALITY_BY_PREFIX.get(pfx, 1)
             h = h_by_prefix.get(pfx, default_h)
             y = np.asarray(tokens, dtype=np.float64)
             if len(y) <= h:  # too short to split — skip (min-length filter
                 continue  # analog: fforma/utils/utils.py:44-52)
-            train, _ = _split(y, h)
-            k = len(kept_ids)
             kept_ids.append(doc_id)
-            kept_train.append(train)
-            kept_h.append(h)
-            fast = bool(np.all(train > 0))
-            groups.setdefault((len(train), s, h, fast), []).append(k)
+            trains.append(_split(y, h)[0])
+            hs.append(h)
+            ss.append(SEASONALITY_BY_PREFIX.get(pfx, 1))
         if not kept_ids:
             yield pd.DataFrame(columns=cols)
             continue
-        h_arr = np.asarray(kept_h, dtype=np.int64)
-        offsets = np.concatenate([[0], np.cumsum(h_arr)])
-        total = int(offsets[-1])
-        out_cols = {c: np.full(total, np.nan) for c in FORECAST_COLS}
-        # pool the optimized-alpha golden-section across ALL fast
-        # groups (one padded recurrence sweep per iteration instead of
-        # one per length group — forecast_batch.optimize_alpha_ragged)
-        from fforma_spark.functions.forecast_batch import optimize_alpha_ragged
-
-        fast_items = [
-            (key, rows, np.stack([kept_train[k] for k in rows]))
-            for key, rows in groups.items()
-            if key[3]
-        ]
-        alphas = (
-            optimize_alpha_ragged([Y for _, _, Y in fast_items])
-            if fast_items
-            else []
-        )
-        for ((n, s, h, _fast), rows, Y), al in zip(fast_items, alphas):
-            idx = np.asarray(rows, dtype=np.int64)
-            dest = (offsets[idx][:, None] + np.arange(h)).ravel()
-            fc = forecast_group_matrix(Y, h, s, alpha_opt=al)
-            if {f"{m}_forec" for m in fc} != set(FORECAST_COLS):
-                raise ValueError(
-                    f"forecast_group_matrix models {sorted(fc)} do not "
-                    f"match FORECAST_COLS {FORECAST_COLS}"
-                )
-            for m, mat in fc.items():
-                out_cols[f"{m}_forec"][dest] = mat.ravel()
-        for (n, s, h, fast), rows in groups.items():
-            if fast:
-                continue  # handled above
-            for k in rows:  # scalar fallback: non-positive values present
-                fc1 = forecast_series(kept_train[k], h, s)
-                lo = int(offsets[k])
-                for c in FORECAST_COLS:
-                    out_cols[c][lo : lo + h] = fc1[c]
-        pos = np.arange(total, dtype=np.int64) - np.repeat(offsets[:-1], h_arr)
+        h_arr = np.asarray(hs, dtype=np.int64)
+        starts = np.repeat(np.cumsum(h_arr) - h_arr, h_arr)
         yield pd.DataFrame(
             {
                 "doc_id": np.repeat(
                     np.asarray(kept_ids, dtype=object), h_arr
                 ),
-                "pos": pos,
-                **out_cols,
+                "pos": np.arange(len(starts), dtype=np.int64) - starts,
+                **forecast_columns(trains, hs, ss),
             }
         )[cols]
 
@@ -194,18 +210,11 @@ def base_forecasts(
     kernels as their trailing window (plans/skew.cap_whales) — the
     sequential models are tail-dominated, the per-task cost bound is
     what matters at 100 TB, and docs ≤ cap are bit-identical."""
-    from fforma_spark.util import ensure_parallelism
+    from fforma_spark.plans.skew import map_sequences
 
     hmap = HORIZON_BY_PREFIX if h_by_prefix is None else h_by_prefix
     gen = lambda it: _forecast_batches(it, hmap, default_h)  # noqa: E731
-    if max_series_len is not None:
-        from fforma_spark.plans.skew import cap_whales
-
-        seq_df = cap_whales(
-            seq_df.select("doc_id", "tokens", "n_tok"), max_series_len
-        )
-    src = ensure_parallelism(seq_df.select("doc_id", "tokens"))
-    return src.mapInPandas(gen, FORECASTS_SCHEMA)
+    return map_sequences(seq_df, gen, FORECASTS_SCHEMA, max_series_len)
 
 
 def holdout_truth(seq_df: DataFrame, h_by_prefix: dict[str, int] | None = None,

@@ -336,7 +336,7 @@ def quantile_forecasts(seq_df, h: int = 8, max_series_len: int | None = None):
     bounded; docs ≤ cap are bit-identical."""
     import pandas as pd
 
-    from fforma_spark.util import ensure_parallelism
+    from fforma_spark.plans.skew import map_sequences
 
     cols = ["doc_id", "pos", "q10", "q50", "q90", "q50_adf", "n_diffs"]
 
@@ -372,11 +372,4 @@ def quantile_forecasts(seq_df, h: int = 8, max_series_len: int | None = None):
                 else pd.DataFrame(columns=cols)
             )
 
-    if max_series_len is not None:
-        from fforma_spark.plans.skew import cap_whales
-
-        seq_df = cap_whales(
-            seq_df.select("doc_id", "tokens", "n_tok"), max_series_len
-        )
-    src = ensure_parallelism(seq_df.select("doc_id", "tokens"))
-    return src.mapInPandas(gen, QF_SCHEMA)
+    return map_sequences(seq_df, gen, QF_SCHEMA, max_series_len)

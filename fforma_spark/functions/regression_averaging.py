@@ -6,10 +6,13 @@ actuals) at a validation cutoff, then ensembles the test-cutoff
 predictions (BaseModelsTrainer fan-out, fforma/base/trainer.py:77-146).
 
 Spark shape: the whole per-series flow — two train splits, 14 base
-forecasts at each cutoff, the PCA/lasso quantile fit, the ensembled
-prediction — runs in ONE Arrow-batched mapInPandas pass over the wide
-sequences table. No shuffle; the dask process pool collapses into
-plain data parallelism, the right 100 TB plan.
+forecasts at each cutoff, the PCA/lasso quantile fits, both ensembled
+predictions — runs in ONE Arrow-batched mapInPandas pass over the wide
+sequences table. Both methods read the same base forecasts, so each
+Arrow batch makes one :func:`models.forecast_columns` call (the one
+forecast dispatch) over both cutoffs of every doc, and the pass emits
+FQRA and LQRA rows tagged by ``method``. No shuffle; the dask process
+pool collapses into plain data parallelism, the right 100 TB plan.
 """
 
 from __future__ import annotations
@@ -24,92 +27,87 @@ from pyspark.sql import DataFrame
 from fforma_spark.functions.models import (
     FORECAST_COLS,
     HORIZON_BY_PREFIX,
-    forecast_series,
+    forecast_columns,
 )
 from fforma_spark.functions.features import SEASONALITY_BY_PREFIX
 from fforma_spark.functions.quantile import fqra_fit_predict, qral1_fit
 
-RA_SCHEMA = "doc_id string, pos long, y_hat double"
-
-
-def _fc_matrix(train: np.ndarray, h: int, s: int) -> np.ndarray:
-    """(h, n_models) base-forecast matrix, FORECAST_COLS column order."""
-    fc = forecast_series(train, h, s)
-    return np.column_stack([fc[c] for c in FORECAST_COLS])
+RA_SCHEMA = "method string, doc_id string, pos long, y_hat double"
 
 
 def _ra_batches(
     it: Iterator[pd.DataFrame],
-    method: str,
     tau: float,
     n_components: int,
     lambd: float,
     default_h: int,
 ) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "pos", "y_hat"]
+    cols = ["method", "doc_id", "pos", "y_hat"]
     for pdf in it:
-        frames = []
+        kept: list[tuple[object, np.ndarray, int]] = []
         for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-            s = SEASONALITY_BY_PREFIX.get(str(doc_id)[:1], 1)
             h = HORIZON_BY_PREFIX.get(str(doc_id)[:1], default_h)
             y = np.asarray(tokens, dtype=np.float64)
-            if len(y) <= 2 * h + 1:  # need a validation AND a test split
-                continue
-            # validation cutoff t−1: fit ensembling weights there …
-            X_val = _fc_matrix(y[: -2 * h], h, s)
-            y_val = y[-2 * h : -h]
-            # … apply them to the test-cutoff forecasts (cutoff t)
-            X_test = _fc_matrix(y[:-h], h, s)
-            if method == "fqra":
-                y_hat = fqra_fit_predict(X_val, y_val, X_test, tau, n_components)
-            elif method == "lqra":
-                beta = qral1_fit(X_val, y_val, tau, lambd)
-                y_hat = X_test @ beta
-            else:  # pragma: no cover
-                raise ValueError(f"unknown method {method!r}")
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "doc_id": doc_id,
-                        "pos": np.arange(h, dtype=np.int64),
-                        "y_hat": np.asarray(y_hat, dtype=np.float64),
-                    }
-                )
-            )
-        yield (
-            pd.concat(frames, ignore_index=True)[cols]
-            if frames
-            else pd.DataFrame(columns=cols)
+            if len(y) > 2 * h + 1:  # need a validation AND a test split
+                kept.append((doc_id, y, h))
+        if not kept:
+            yield pd.DataFrame(columns=cols)
+            continue
+        hs = [h for _, _, h in kept]
+        ss = [SEASONALITY_BY_PREFIX.get(str(d)[:1], 1) for d, _, _ in kept]
+        # rows 0..D-1 train up to the validation cutoff, D..2D-1 up to
+        # the test cutoff
+        fc = forecast_columns(
+            [y[: -2 * h] for _, y, h in kept] + [y[:-h] for _, y, h in kept],
+            hs + hs,
+            ss + ss,
         )
+        offsets = np.concatenate([[0], np.cumsum(hs + hs)])
+
+        def matrix(row: int, h: int) -> np.ndarray:
+            """(h, n_models) base-forecast matrix, FORECAST_COLS order."""
+            lo = offsets[row]
+            return np.column_stack([fc[c][lo : lo + h] for c in FORECAST_COLS])
+
+        fqra, lqra = [], []
+        for k, (_, y, h) in enumerate(kept):
+            # fit the ensembling weights at the validation cutoff t−1 …
+            X_val, y_val = matrix(k, h), y[-2 * h : -h]
+            # … and apply them to the test-cutoff forecasts (cutoff t)
+            X_test = matrix(len(kept) + k, h)
+            fqra.append(fqra_fit_predict(X_val, y_val, X_test, tau, n_components))
+            lqra.append(X_test @ qral1_fit(X_val, y_val, tau, lambd))
+        ids = np.repeat(np.asarray([d for d, _, _ in kept], dtype=object), hs)
+        pos = np.concatenate([np.arange(h, dtype=np.int64) for h in hs])
+        yield pd.DataFrame(
+            {
+                "method": np.repeat(["fqra", "lqra"], len(ids)),
+                "doc_id": np.concatenate([ids, ids]),
+                "pos": np.concatenate([pos, pos]),
+                "y_hat": np.concatenate(fqra + lqra).astype(np.float64),
+            }
+        )[cols]
 
 
 def regression_averaging_forecasts(
     seq_df: DataFrame,
-    method: str = "fqra",
     tau: float = 0.5,
     n_components: int = 2,
     lambd: float = 1.0,
     default_h: int = 8,
     max_series_len: int | None = None,
 ) -> DataFrame:
-    """Per-series FQRA/LQRA ensemble forecasts as a long panel
-    (doc_id, pos, y_hat).
+    """Per-series FQRA and LQRA ensemble forecasts as one long panel
+    (method, doc_id, pos, y_hat), ``method`` in {'fqra', 'lqra'}.
 
     ``max_series_len`` arms whale protection exactly like
     models.base_forecasts: whale docs enter the PCA/IRLS kernels as
     their trailing window (plans/skew.cap_whales) so no Arrow
     batch/task is dominated by a 200k-token doc; docs ≤ cap are
     bit-identical."""
-    from fforma_spark.util import ensure_parallelism
+    from fforma_spark.plans.skew import map_sequences
 
     gen = lambda it: _ra_batches(  # noqa: E731
-        it, method, tau, n_components, lambd, default_h
+        it, tau, n_components, lambd, default_h
     )
-    if max_series_len is not None:
-        from fforma_spark.plans.skew import cap_whales
-
-        seq_df = cap_whales(
-            seq_df.select("doc_id", "tokens", "n_tok"), max_series_len
-        )
-    src = ensure_parallelism(seq_df.select("doc_id", "tokens"))
-    return src.mapInPandas(gen, RA_SCHEMA)
+    return map_sequences(seq_df, gen, RA_SCHEMA, max_series_len)

@@ -102,30 +102,6 @@ def rollup_from_tier(
     return _finalize(agg)
 
 
-def rollup_ladder(
-    panel: DataFrame, tiers: tuple[TierSpec, ...] = DEFAULT_TIERS
-) -> dict[str, DataFrame]:
-    """Build the whole cascade raw→T1→T2→…; each tier derives from the
-    previous one (bucket widths must divide evenly)."""
-    for prev, cur in zip(tiers, tiers[1:]):
-        if cur.bucket % prev.bucket != 0:
-            raise ValueError(
-                f"tier {cur.name} bucket {cur.bucket} not a multiple "
-                f"of {prev.name} bucket {prev.bucket}"
-            )
-    out: dict[str, DataFrame] = {}
-    prev_spec: TierSpec | None = None
-    prev_df: DataFrame | None = None
-    for spec in tiers:
-        if prev_spec is None:
-            df = rollup_tier(panel, spec.bucket)
-        else:
-            df = rollup_from_tier(prev_df, spec.bucket // prev_spec.bucket)
-        out[spec.name] = df
-        prev_spec, prev_df = spec, df
-    return out
-
-
 def apply_retention(tier: DataFrame, keep_buckets: int) -> DataFrame:
     """Retention-policy enforcement: keep only the trailing
     ``keep_buckets`` buckets of each series (the drop-chunks half of a

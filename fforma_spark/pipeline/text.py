@@ -1,10 +1,11 @@
 """Text analysis operators over the documents table: language ID,
 quality scoring, token counting, document fingerprinting.
 
-All four are pure Catalyst column expressions (JVM-side, whole-stage
-codegen, zero shuffle — a straight scan→project plan that parallelizes
-linearly at any scale). Each has a DuckDB SQL twin built from the same
-cross-engine primitives so values hash-match.
+On Spark all four are pure Catalyst column expressions computed in
+one :func:`text_stats` projection (JVM-side, whole-stage codegen, zero
+shuffle — a straight scan→project plan that parallelizes linearly at
+any scale). Each has a DuckDB SQL twin built from the same cross-engine
+primitives so values hash-match.
 """
 
 from __future__ import annotations
@@ -30,7 +31,6 @@ BPE_RE = "[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9 ]"
 
 
 def _stop_count(words: Column, stops: list[str]) -> Column:
-    lits = [F.lit(s) for s in stops]
     return F.size(F.filter(words, lambda w: w.isin(*stops)))
 
 
@@ -39,27 +39,11 @@ def _stop_count_sql(words: str, stops: list[str]) -> str:
     return f"len(list_filter({words}, w -> w IN ({inlist})))"
 
 
-def lang_id(docs: DataFrame) -> DataFrame:
+def lang_id_sql() -> str:
     """Heuristic language ID: argmax stopword-hit count per language,
     'und' when no stopword hits at all. Ties resolve to the FIRST
-    language in iteration order below (deterministic): iterating
-    LANGS forward with strict '>' means a later language must strictly
-    beat the incumbent, so on an en/es tie 'en' wins."""
-    w = words_col()
-    counts = {lang: _stop_count(w, STOPWORDS[lang]) for lang in LANGS}
-    best = F.lit("und")
-    best_n = F.lit(0)
-    # forward fold with strict '>': first language wins ties
-    for lang in LANGS:
-        take = counts[lang] > best_n
-        best = F.when(take, F.lit(lang)).otherwise(best)
-        best_n = F.when(take, counts[lang]).otherwise(best_n)
-    sel = [F.col("doc_id").cast("string").alias("doc_id"), best.alias("lang_pred")]
-    sel += [counts[lang].alias(f"hits_{lang}") for lang in LANGS]
-    return docs.select(*sel)
-
-
-def lang_id_sql() -> str:
+    language in LANGS order: folding forward with strict '>' means a
+    later language must strictly beat the incumbent."""
     w = words_sql()
     hits = {lang: _stop_count_sql(w, STOPWORDS[lang]) for lang in LANGS}
     cols = ", ".join(f"{hits[lang]} AS hits_{lang}" for lang in LANGS)
@@ -78,38 +62,11 @@ def lang_id_sql() -> str:
     """
 
 
-def quality_score(docs: DataFrame) -> DataFrame:
-    """Heuristic quality features + composite score in [0,1]:
-    length, word stats, stopword ratio, punctuation ratio.
-
-    Formula (shared verbatim with the oracle): clamp to [0,1] of
-      0.3*min(n_words/100,1) + 0.4*min(stop_ratio*5,1)
-      + 0.3*(1 - min(punct_ratio*10,1))
-    """
-    w = words_col()
-    n_words = F.size(w)
-    stop_hits = _stop_count(w, STOPWORDS["en"])
-    stop_ratio = stop_hits / n_words
-    n_chars = F.length("text")
-    punct = n_chars - F.length(F.regexp_replace("text", "[^A-Za-z0-9 ]", ""))
-    punct_ratio = punct / n_chars
-    mean_wlen = (n_chars - (n_words - 1)) / n_words  # chars net of separators
-    score = (
-        0.3 * F.least(n_words / F.lit(100.0), F.lit(1.0))
-        + 0.4 * F.least(stop_ratio * 5.0, F.lit(1.0))
-        + 0.3 * (1.0 - F.least(punct_ratio * 10.0, F.lit(1.0)))
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        n_words.alias("n_words"),
-        stop_hits.alias("stop_hits"),
-        punct.alias("n_punct"),
-        mean_wlen.alias("mean_word_len"),
-        score.alias("quality"),
-    )
-
-
 def quality_score_sql() -> str:
+    """Heuristic quality features + composite score in [0,1]: length,
+    word stats, stopword ratio, punctuation ratio. Score: clamp to
+    [0,1] of 0.3*min(n_words/100,1) + 0.4*min(stop_ratio*5,1)
+    + 0.3*(1 - min(punct_ratio*10,1))."""
     w = words_sql()
     stop = _stop_count_sql(w, STOPWORDS["en"])
     return f"""
@@ -132,17 +89,6 @@ def quality_score_sql() -> str:
     """
 
 
-def token_counts(docs: DataFrame) -> DataFrame:
-    """Whitespace token count + BPE-ish regex token count."""
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.size(words_col()).alias("ws_tokens"),
-        F.size(F.expr(f"regexp_extract_all(text, '{BPE_RE}', 0)")).alias(
-            "bpe_tokens"
-        ),
-    )
-
-
 def token_counts_sql() -> str:
     return f"""
         SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -152,22 +98,10 @@ def token_counts_sql() -> str:
     """
 
 
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """Order-sensitive rolling document fingerprint: left fold of
-    (acc*31 + h64(word) % MOD) % MOD over the word sequence —
-    the classic polynomial rolling hash, fully JVM-side."""
-    wh = F.transform(words_col(), lambda w: h64(w) % MOD)
-    fp = F.aggregate(
-        wh,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * 31 + x) % MOD,
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), fp.alias("fingerprint")
-    )
-
-
 def fingerprint_sql() -> str:
+    """Order-sensitive rolling document fingerprint: left fold of
+    (acc*31 + h64(word) % MOD) % MOD over the word sequence — the
+    classic polynomial rolling hash."""
     wh = f"list_transform({words_sql()}, w -> {h64_sql('w')} % {MOD})"
     return f"""
         SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -182,9 +116,10 @@ def text_stats(docs: DataFrame) -> DataFrame:
     counting, fingerprinting) in ONE scan→project pass — a single
     whole-stage-codegen stage, zero shuffles, one read of `text`.
 
-    Column semantics are identical to the individual operators above;
-    this is the production shape (you never want four scans of a 100 TB
-    corpus when one projection computes every per-doc text stat)."""
+    Column semantics are those of the four DuckDB twins that
+    :func:`text_stats_sql` joins; this is the production shape (you
+    never want four scans of a 100 TB corpus when one projection
+    computes every per-doc text stat)."""
     w = words_col()
     counts = {lang_: _stop_count(w, STOPWORDS[lang_]) for lang_ in LANGS}
     best = F.lit("und")

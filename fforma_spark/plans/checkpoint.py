@@ -126,8 +126,16 @@ def materialize_ladder(
     """Build (or resume) the tier cascade under ``base_dir``.
 
     Returns {tier_name: manifest}; manifests of skipped tiers are the
-    previously persisted ones (marked "resumed": True).
+    previously persisted ones (marked "resumed": True). Each tier
+    derives from the previous one, so the whole cascade's bucket
+    widths are checked before the first write.
     """
+    for fine, coarse in zip(tiers, tiers[1:]):
+        if coarse.bucket % fine.bucket != 0:
+            raise ValueError(
+                f"{coarse.name} bucket {coarse.bucket} not a multiple of "
+                f"{fine.name} bucket {fine.bucket}"
+            )
     spark = panel.sparkSession
     results: dict[str, dict] = {}
     prev: TierSpec | None = None
@@ -143,11 +151,6 @@ def materialize_ladder(
             df = rollup_tier(panel, tier.bucket, exact_decimals)
             src = "raw"
         else:
-            if tier.bucket % prev.bucket != 0:
-                raise ValueError(
-                    f"{tier.name} bucket {tier.bucket} not a multiple of "
-                    f"{prev.name} bucket {prev.bucket}"
-                )
             df = rollup_from_tier(
                 read_tier(spark, base_dir, prev),
                 tier.bucket // prev.bucket,

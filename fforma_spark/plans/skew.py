@@ -13,11 +13,16 @@ is explicit and measured:
   associative kernels (rollups, compression) where per-chunk results
   re-merge; sequential kernels (SES etc.) instead enforce the
   max-length contract (SURVEY §7.3).
+* ``map_sequences`` — the whale-capped ``mapInPandas`` stage every
+  sequential-kernel fabric (base forecasts, regression averaging,
+  quantile AR) runs through.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from fforma_spark.util import ensure_parallelism
 
 
 def skew_report(seq_df: DataFrame, whale_factor: float = 10.0) -> dict:
@@ -146,6 +151,21 @@ def cap_whales(seq_df: DataFrame, max_series_len: int) -> DataFrame:
         .alias("tokens"),
         F.least(F.col("n_tok"), F.lit(cap)).cast("int").alias("n_tok"),
     )
+
+
+def map_sequences(
+    seq_df: DataFrame, gen, schema: str, max_series_len: int | None
+) -> DataFrame:
+    """Run a sequential-kernel ``mapInPandas`` body over (doc_id,
+    tokens), whale-capped by :func:`cap_whales` when
+    ``max_series_len`` is set, on a frame spread over the task slots
+    (util.ensure_parallelism)."""
+    if max_series_len is not None:
+        seq_df = cap_whales(
+            seq_df.select("doc_id", "tokens", "n_tok"), max_series_len
+        )
+    src = ensure_parallelism(seq_df.select("doc_id", "tokens"))
+    return src.mapInPandas(gen, schema)
 
 
 def whale_exact_moments(seq_df: DataFrame) -> DataFrame:

@@ -64,14 +64,6 @@ def _round6(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.withColumns({c: stable_round6(c) for c in cols})
 
 
-def _sql_rounded(inner_sql: str, round_cols: list[str], keep_cols: list[str]) -> str:
-    """Wrap a DuckDB subquery, stable-rounding ``round_cols``."""
-    sel = ", ".join(
-        keep_cols + [f"{sql_round6(c)} AS {c}" for c in round_cols]
-    )
-    return f"SELECT {sel} FROM ({inner_sql}) _rq"
-
-
 # ---------------------------------------------------------------------------
 # Retention-tier rollups (SURVEY §2.5 tumbling rebucket; north_rule core)
 # ---------------------------------------------------------------------------
@@ -1524,31 +1516,18 @@ def qra_ensembles_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     regress actuals on the factors, ensemble the test forecasts;
     method='lqra' — Lasso QRA (:58-105 over _models.py:500-554):
     pinball + L1-to-equal-weights fit on validation forecasts, applied
-    at the test cutoff. One mapInPandas pass each, unioned."""
+    at the test cutoff. One mapInPandas pass over shared base
+    forecasts emits both."""
     from fforma_spark.functions.regression_averaging import (
         regression_averaging_forecasts,
     )
 
-    seq = sequences_from_documents(spark, sf_dir)
-    fqra = regression_averaging_forecasts(
-        seq, method="fqra", tau=0.5, n_components=2,
+    ra = regression_averaging_forecasts(
+        sequences_from_documents(spark, sf_dir),
+        tau=0.5, n_components=2, lambd=1.0,
         max_series_len=_SEQ_KERNEL_CAP,
-    ).select(
-        F.lit("fqra").alias("method"),
-        "doc_id",
-        "pos",
-        stable_round6("y_hat").alias("y_hat"),
     )
-    lqra = regression_averaging_forecasts(
-        seq, method="lqra", tau=0.5, lambd=1.0,
-        max_series_len=_SEQ_KERNEL_CAP,
-    ).select(
-        F.lit("lqra").alias("method"),
-        "doc_id",
-        "pos",
-        stable_round6("y_hat").alias("y_hat"),
-    )
-    return fqra.unionByName(lqra)
+    return _round6(ra, ["y_hat"])
 
 
 @register("fforma_ensemble_documents")  # rows-only: GBT training is not SQL

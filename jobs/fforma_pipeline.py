@@ -35,12 +35,11 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=30)
     ap.add_argument(
         "--hpo",
-        choices=("none", "grid", "halving", "tpe"),
+        choices=("none", "grid", "tpe"),
         default="none",
         help="meta-learner hyper-parameter search: exhaustive grid CV, "
-        "successive halving, or the from-scratch TPE+median-pruner "
-        "study (the reference's optuna flow, cross_validation/"
-        "common.py:100-117)",
+        "or the from-scratch TPE+median-pruner study (the reference's "
+        "optuna flow, cross_validation/common.py:100-117)",
     )
     ap.add_argument("--hpo-trials", type=int, default=20)
     args = ap.parse_args()
@@ -125,19 +124,6 @@ def main() -> None:
         )
         hpo_info = {"mode": "grid", "best": best, "cv_loss": round(loss, 6),
                     "n_trials": len(trials)}
-    elif args.hpo == "halving":
-        from fforma_spark.functions.cross_validation import (
-            successive_halving_fforma,
-        )
-
-        best, loss, trials, model, kept, fcols, cost = (
-            successive_halving_fforma(
-                feats, errors, loss_cols, benchmark="naive2_owa",
-            )
-        )
-        hpo_info = {"mode": "halving", "best": best,
-                    "cv_loss": round(loss, 6),
-                    "cost_ratio": round(cost["ratio"], 4)}
     else:
         from fforma_spark.functions.hpo import tpe_cross_validate_fforma
 

@@ -102,57 +102,3 @@ def test_cv_skips_empty_folds_and_raises_clearly():
     assert np.isfinite(loss)
     with pytest.raises(ValueError, match="no usable CV folds"):
         _cv_loss(X[:0], err[:0], classes[:0], params, n_splits=3, seed=1)
-
-
-def test_successive_halving_matches_full_grid_at_fraction_of_cost(spark):
-    """Successive halving must pick params whose full-CV loss is no
-    worse than the exhaustive grid's winner, at < 40% of the full
-    grid's full-budget fold evaluations (VERDICT r2 item 6)."""
-    from pyspark.sql import functions as F
-
-    from fforma_spark.functions.cross_validation import (
-        successive_halving_fforma,
-    )
-    from fforma_spark.functions.features import features_wide
-    from fforma_spark.functions.metrics import evaluate_with_owa, mase_scale
-    from fforma_spark.functions.models import (
-        FORECAST_COLS,
-        base_forecasts,
-        holdout_truth,
-        train_split,
-    )
-    from fforma_spark.operators.reshape import explode_panel
-    from fforma_spark.sources.tables import sequences_from_documents
-
-    seq = sequences_from_documents(spark, "/root/testdata/sf0.001")
-    fc = base_forecasts(seq, default_h=8)
-    truth = holdout_truth(seq, default_h=8)
-    train_panel = explode_panel(train_split(seq, default_h=8)).select(
-        "doc_id", "pos", "val"
-    )
-    ev = evaluate_with_owa(
-        truth, fc, FORECAST_COLS, mase_scale(train_panel, F.lit(1))
-    )
-    owa_cols = [c for c in ev.columns if c.endswith("_owa")]
-    feats = features_wide(seq).na.fill(0.0).cache()
-    errors = ev.select("doc_id", *owa_cols).na.fill(0.0).cache()
-    spec = {
-        "learning_rate": [0.05, 0.1, 0.3],
-        "max_depth": [2, 3],
-        "n_rounds": [8, 16],
-    }
-    full_best, full_loss, full_trials, *_ = cross_validate_fforma(
-        feats, errors, owa_cols, benchmark="naive2_owa",
-        spec=spec, n_splits=3,
-    )
-    sh_best, sh_loss, sh_trials, _m, _k, _f, cost = successive_halving_fforma(
-        feats, errors, owa_cols, benchmark="naive2_owa",
-        spec=spec, n_splits=3,
-    )
-    assert cost["ratio"] < 0.4, cost
-    assert len(sh_trials) < len(full_trials)
-    # same-or-better selected params (full-CV loss of the SH pick vs
-    # the exhaustive winner)
-    assert sh_loss <= full_loss + 1e-12, (sh_loss, full_loss)
-    feats.unpersist()
-    errors.unpersist()

@@ -299,11 +299,12 @@ def test_whale_cap_engages_for_quantile_and_qra(spark):
     ).repartition(2)
 
     def rows_of(df):
+        keys = [k for k in ("method", "doc_id", "pos") if k in df.columns]
         return {
-            (r["doc_id"], r["pos"]): tuple(
+            tuple(r[k] for k in keys): tuple(
                 round(v, 9) if isinstance(v, float) else v
                 for k, v in sorted(r.asDict().items())
-                if k not in ("doc_id", "pos")
+                if k not in keys
             )
             for r in df.collect()
         }
@@ -315,10 +316,8 @@ def test_whale_cap_engages_for_quantile_and_qra(spark):
     uncapped = rows_of(quantile_forecasts(seq.filter("doc_id = 'small'"), h=8))
     assert {k: v for k, v in got.items() if k[0] == "small"} == uncapped
 
-    got_ra = rows_of(
-        regression_averaging_forecasts(seq, method="lqra", max_series_len=cap)
-    )
-    want_ra = rows_of(regression_averaging_forecasts(sliced, method="lqra"))
+    got_ra = rows_of(regression_averaging_forecasts(seq, max_series_len=cap))
+    want_ra = rows_of(regression_averaging_forecasts(sliced))
     assert got_ra == want_ra
 
     # the cap is pure Catalyst: a slice CASE in the plan, no extra

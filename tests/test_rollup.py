@@ -10,7 +10,6 @@ from fforma_spark.operators.gapfill import locf_fill, locf_fill_sql
 from fforma_spark.operators.reshape import collect_series, explode_panel
 from fforma_spark.operators.rollup import (
     rollup_from_tier,
-    rollup_ladder,
     rollup_tier,
     rollup_tier_sql,
     TierSpec,
@@ -77,9 +76,17 @@ def test_rollup_matches_numpy_oracle(spark):
     assert got == exp
 
 
-def test_ladder_tiers_divide():
-    with pytest.raises(ValueError):
-        rollup_ladder(None, (TierSpec("a", 10), TierSpec("b", 25)))
+def test_ladder_tiers_divide(spark, tmp_path):
+    """A cascade whose bucket widths do not divide fails before the
+    first tier is written (no full shuffle of the raw panel for a
+    ladder that cannot finish)."""
+    from fforma_spark.plans.checkpoint import materialize_ladder
+
+    panel = explode_panel(synth_sequences(spark, n_docs=4, seed=3))
+    tiers = (TierSpec("a", 10), TierSpec("b", 20), TierSpec("c", 50))
+    with pytest.raises(ValueError, match="c bucket 50 not a multiple of b"):
+        materialize_ladder(panel, str(tmp_path), tiers, fingerprint="fp")
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_locf_fill_matches_duckdb(spark, ddb):
