@@ -10,8 +10,11 @@ squares) on the pinball loss — the classical Schlossmacher/MM scheme:
 w_i = τ/max(|r_i|,ε) for positive residuals, (1−τ)/max(|r_i|,ε) for
 negative; converges to the LP optimum for non-degenerate designs.
 
-Every step is per-series numpy → runs inside the same Arrow-batched
-mapInPandas fabric as the other kernels.
+The IRLS, QAR and ADF fits are per-series numpy; the LQRA proximal
+subgradient (:func:`qral1_fit_stack`) runs one loop over a (B, h, K)
+stack of series, each row's iterations independent of the others. All
+run inside the same Arrow-batched mapInPandas fabric as the other
+kernels.
 """
 
 from __future__ import annotations
@@ -268,52 +271,82 @@ def fqra_fit_predict(
     return Zte @ beta
 
 
-def qral1_fit(
-    X: np.ndarray,
-    y: np.ndarray,
-    tau: float,
-    lambd: float,
-    n_iter: int = 4000,
+# proximal subgradient iterations per LQRA fit
+QRAL1_ITERS = 4000
+
+
+def qral1_fit_stack(
+    X: np.ndarray, Y: np.ndarray, tau: float, lambd: float
 ) -> np.ndarray:
     """Lasso Quantile Regression Averaging weights
-    (fforma/base/_models.py:500-554): minimize
-    Σ pinball_τ(y − Xβ) + λ·mean(y)·‖β − w̄‖₁ with w̄ the equal-weight
-    vector — proximal subgradient descent (the reference solves the
-    same objective with cvxpy; problem sizes here are h×K, tiny).
-    Returns beta."""
+    (fforma/base/_models.py:500-554) for a stack of B series of one
+    horizon h: ``X`` is (B, h, K) base forecasts, ``Y`` (B, h) actuals.
+    Per series, minimize Σ pinball_τ(y − Xβ) + λ·mean(y)·‖β − w̄‖₁ with
+    w̄ the equal-weight vector — proximal subgradient descent (the
+    reference solves the same objective with cvxpy; problems are h×K,
+    tiny). Returns beta, (B, K).
+
+    Every row keeps its own penalty, step size, objective and best β,
+    so a row's result does not depend on the rest of the stack, and it
+    is bit-identical to the one-series loop (tests/lqra_oracle.py):
+    ``X @ β`` is a stacked ``np.matmul`` (matches the 2-D product),
+    ``Xᵀψ`` goes through the strided transpose (a contiguous copy
+    rounds differently), and √lip is a Python float power (an array
+    ``** 0.5`` takes numpy's sqrt path)."""
     X = np.asarray(X, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    n, k = X.shape
+    Y = np.asarray(Y, dtype=np.float64)
+    if X.ndim != 3 or Y.shape != X.shape[:2]:
+        raise ValueError(f"need X (B, h, K), Y (B, h): {X.shape}, {Y.shape}")
+    k = X.shape[2]
+    Xt = X.transpose(0, 2, 1)
     w_avg = np.ones(k) / k
-    pen = float(lambd) * float(y.mean())
-    # warm start from the unpenalized IRLS optimum (exact answer when
-    # λ=0, good neighborhood otherwise); w_avg stays a candidate via
+    pen = float(lambd) * Y.mean(axis=1)
+
+    def residual(b):
+        return Y - np.matmul(X, b[:, :, None])[:, :, 0]
+
+    def psi_of(r):
+        # pinball subgradient weight: τ above, τ−1 below, 0 on the fit
+        return (r > 0) * tau + (r < 0) * (tau - 1.0)
+
+    def objective(r, psi, b):
+        # ψ equals the pinball weight wherever r ≠ 0, so r·ψ is the loss
+        return (r * psi).sum(axis=1) + pen * np.abs(b - w_avg).sum(axis=1)
+
+    # warm start from each row's unpenalized IRLS optimum (exact answer
+    # when λ=0, good neighborhood otherwise); w̄ stays a candidate via
     # best-objective tracking below
-    beta = quantile_regression(X, y, tau)
-    best_beta, best_obj = beta.copy(), np.inf
+    beta = np.stack([quantile_regression(x, y, tau) for x, y in zip(X, Y)])
+    best_beta, best_obj = beta.copy(), np.full(len(X), np.inf)
 
-    def objective(b):
-        r = y - X @ b
-        pin = np.where(r >= 0, tau * r, (tau - 1) * r).sum()
-        return pin + pen * np.abs(b - w_avg).sum()
+    def keep_better(obj, b):
+        better = obj < best_obj
+        np.copyto(best_obj, obj, where=better)
+        np.copyto(best_beta, b, where=better[:, None])
 
-    for cand in (beta, w_avg):
-        o = objective(cand)
-        if o < best_obj:
-            best_obj, best_beta = o, cand.copy()
-    lip = np.linalg.norm(X, 2) ** 2 + 1e-12
-    for t in range(1, n_iter + 1):
-        r = y - X @ beta
-        psi = np.where(r > 0, tau, np.where(r < 0, tau - 1.0, 0.0))
-        grad = -X.T @ psi  # subgradient of the pinball sum
-        eta = 1.0 / (lip ** 0.5 * t ** 0.5 + 1e-12)
-        z = beta - eta * grad
+    r = residual(beta)
+    psi = psi_of(r)
+    keep_better(objective(r, psi, beta), beta)
+    w_rows = np.broadcast_to(w_avg, beta.shape)
+    r_w = residual(w_rows)
+    keep_better(objective(r_w, psi_of(r_w), w_rows), w_rows)
+    # √(‖X‖₂² + 1e-12) per row, the step size's Lipschitz factor
+    root_lip = np.array(
+        [(float(s) ** 2 + 1e-12) ** 0.5
+         for s in np.linalg.svd(X, compute_uv=False).max(axis=1)]
+    )
+    for t in range(1, QRAL1_ITERS + 1):
+        eta = 1.0 / (root_lip * t ** 0.5 + 1e-12)
+        # z = β − η·(−Xᵀψ)
+        z = beta + eta[:, None] * np.matmul(Xt, psi[:, :, None])[:, :, 0]
         # prox of η·pen·‖·−w̄‖₁  (soft threshold around w̄)
         d = z - w_avg
-        beta = w_avg + np.sign(d) * np.maximum(np.abs(d) - eta * pen, 0.0)
-        obj = objective(beta)
-        if obj < best_obj:
-            best_obj, best_beta = obj, beta.copy()
+        beta = w_avg + np.sign(d) * np.maximum(
+            np.abs(d) - (eta * pen)[:, None], 0.0
+        )
+        r = residual(beta)
+        psi = psi_of(r)
+        keep_better(objective(r, psi, beta), beta)
     return best_beta
 
 

@@ -11,8 +11,11 @@ predictions — runs in ONE Arrow-batched mapInPandas pass over the wide
 sequences table. Both methods read the same base forecasts, so each
 Arrow batch makes one :func:`models.forecast_columns` call (the one
 forecast dispatch) over both cutoffs of every doc, and the pass emits
-FQRA and LQRA rows tagged by ``method``. No shuffle; the dask process
-pool collapses into plain data parallelism, the right 100 TB plan.
+FQRA and LQRA rows tagged by ``method``. FQRA fits per doc; LQRA makes
+one :func:`quantile.qral1_fit_stack` call per horizon in the batch,
+over the stacked validation-cutoff matrices of that horizon's docs.
+No shuffle; the dask process pool collapses into plain data
+parallelism, the right 100 TB plan.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from fforma_spark.functions.models import (
     forecast_columns,
 )
 from fforma_spark.functions.features import SEASONALITY_BY_PREFIX
-from fforma_spark.functions.quantile import fqra_fit_predict, qral1_fit
+from fforma_spark.functions.quantile import fqra_fit_predict, qral1_fit_stack
 
 RA_SCHEMA = "method string, doc_id string, pos long, y_hat double"
 
@@ -69,14 +72,27 @@ def _ra_batches(
             lo = offsets[row]
             return np.column_stack([fc[c][lo : lo + h] for c in FORECAST_COLS])
 
-        fqra, lqra = [], []
-        for k, (_, y, h) in enumerate(kept):
-            # fit the ensembling weights at the validation cutoff t−1 …
-            X_val, y_val = matrix(k, h), y[-2 * h : -h]
-            # … and apply them to the test-cutoff forecasts (cutoff t)
-            X_test = matrix(len(kept) + k, h)
-            fqra.append(fqra_fit_predict(X_val, y_val, X_test, tau, n_components))
-            lqra.append(X_test @ qral1_fit(X_val, y_val, tau, lambd))
+        # fit the ensembling weights at the validation cutoff t−1 …
+        X_val = [matrix(k, h) for k, h in enumerate(hs)]
+        y_val = [y[-2 * h : -h] for _, y, h in kept]
+        # … and apply them to the test-cutoff forecasts (cutoff t)
+        X_test = [matrix(len(kept) + k, h) for k, h in enumerate(hs)]
+        fqra = [
+            fqra_fit_predict(Xv, yv, Xt, tau, n_components)
+            for Xv, yv, Xt in zip(X_val, y_val, X_test)
+        ]
+        # one LQRA fit per horizon: docs of one h stack into (B, h, K)
+        lqra = [None] * len(kept)
+        for h in sorted(set(hs)):
+            rows = [k for k, hk in enumerate(hs) if hk == h]
+            betas = qral1_fit_stack(
+                np.stack([X_val[k] for k in rows]),
+                np.stack([y_val[k] for k in rows]),
+                tau,
+                lambd,
+            )
+            for k, beta in zip(rows, betas):
+                lqra[k] = X_test[k] @ beta
         ids = np.repeat(np.asarray([d for d, _, _ in kept], dtype=object), hs)
         pos = np.concatenate([np.arange(h, dtype=np.int64) for h in hs])
         yield pd.DataFrame(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -19,12 +20,51 @@ TABLES = (
 ).split()
 
 
+# parquet path -> (_files_signature of its files, the schema Spark
+# inferred from them). Shared by every caller in the process: an entry
+# is used only while the files still match its signature.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _files_signature(
+    spark: SparkSession, path: str
+) -> tuple[tuple[str, int, int], ...]:
+    """(name, size, mtime) of every file under ``path``, sorted, listed
+    through the Hadoop FileSystem that Spark reads the path with (any
+    scheme); empty when nothing exists there."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return ()
+    files = fs.listFiles(hpath, True)
+    out = []
+    while files.hasNext():
+        st = files.next()
+        out.append(
+            (st.getPath().toString(), st.getLen(), st.getModificationTime())
+        )
+    return tuple(sorted(out))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver table; Iceberg-gated for production catalogs."""
+    """Read one driver table; Iceberg-gated for production catalogs.
+
+    ``spark.read.parquet`` without a schema runs a one-task job that
+    reads a footer to infer it. The inferred schema is kept per path
+    with the signature (name, size, mtime) of its files, and later reads
+    pass it while the signature still matches: no job, same schema. A
+    rewritten table has a new signature and is inferred again."""
     catalog = os.environ.get("FFORMA_SPARK_ICEBERG_CATALOG")
     if catalog:  # pragma: no cover — no Iceberg jar in sandbox
         return spark.read.table(f"{catalog}.{name}")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    sig = _files_signature(spark, path)
+    known = _SCHEMAS.get(path)
+    if known is not None and known[0] == sig:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (sig, df.schema)
+    return df
 
 
 def write_output(

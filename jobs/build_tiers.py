@@ -72,7 +72,7 @@ def main() -> None:
 
     from fforma_spark.operators.reshape import explode_panel
     from fforma_spark.operators.rollup import TierSpec
-    from fforma_spark.plans.checkpoint import materialize_ladder
+    from fforma_spark.plans.checkpoint import check_ladder, materialize_ladder
     from fforma_spark.plans.skew import skew_report
     from fforma_spark.sources.synth import synth_sequences
 
@@ -81,6 +81,13 @@ def main() -> None:
         codegen_compiles,
         warm_python_workers,
     )
+
+    tiers = tuple(
+        TierSpec(name, int(bucket))
+        for name, bucket in (t.split(":") for t in args.tiers.split(","))
+    )
+    # a ladder that does not cascade fails before any Spark work
+    check_ladder(tiers)
 
     spark = (
         SparkSession.builder.appName("fforma_spark_build_tiers")
@@ -113,11 +120,6 @@ def main() -> None:
     else:
         ap.error("one of --input / --synth is required")
         return
-
-    tiers = tuple(
-        TierSpec(name, int(bucket))
-        for name, bucket in (t.split(":") for t in args.tiers.split(","))
-    )
 
     phase = {}
     tp = time.time()

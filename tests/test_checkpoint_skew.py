@@ -288,3 +288,80 @@ def test_incremental_refresh_on_changed_fingerprint(spark, panel, tmp_path):
     # and the new snapshot now resumes under ITS fingerprint
     m3 = materialize_ladder(changed, base, TIERS, fingerprint="snap2")
     assert all(m.get("resumed") for m in m3.values())
+
+
+def test_read_tier_schema_is_the_parquet_schema(spark, panel, tmp_path):
+    """read_tier passes the manifest's schema instead of inferring one;
+    it must be exactly what a parquet read of the tier infers."""
+    base = str(tmp_path / "tiers")
+    materialize_ladder(panel, base, TIERS[:2], fingerprint="fp1")
+    for tier in TIERS[:2]:
+        path = os.path.join(base, tier.name, "data")
+        inferred = spark.read.parquet(path).drop("_pid").schema
+        assert read_tier(spark, base, tier).schema == inferred
+
+
+def test_manifest_without_schema_is_incomplete(spark, panel, tmp_path):
+    """A manifest that records no schema cannot feed read_tier, so the
+    tier counts as unwritten and is rebuilt."""
+    base = str(tmp_path / "tiers")
+    materialize_ladder(panel, base, TIERS[:1], fingerprint="fp1")
+    mp = os.path.join(base, "t1", "_manifest.json")
+    with open(mp) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    assert not tier_is_complete(base, TIERS[0], "fp1")
+    again = materialize_ladder(panel, base, TIERS[:1], fingerprint="fp1")
+    assert not again["t1"].get("resumed") and "schema" in again["t1"]
+
+
+def test_footer_lineage_rejects_a_row_group_of_two_partitions(tmp_path):
+    """Lineage is read from each row group's _pid statistics; a row
+    group holding two partitions' rows cannot be attributed and
+    raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fforma_spark.plans.checkpoint import _footer_lineage
+
+    pq.write_table(
+        pa.table({"v": [1.0, 2.0, 3.0], "_pid": pa.array([4, 4, 4], pa.int32())}),
+        str(tmp_path / "part-0.parquet"),
+    )
+    (tmp_path / "_SUCCESS").write_text("")
+    assert _footer_lineage(str(tmp_path)) == {4: 3}
+    pq.write_table(
+        pa.table({"v": [1.0, 2.0], "_pid": pa.array([4, 5], pa.int32())}),
+        str(tmp_path / "part-1.parquet"),
+    )
+    with pytest.raises(ValueError, match="part-1.parquet row group 0"):
+        _footer_lineage(str(tmp_path))
+
+
+def test_build_tiers_job_rejects_bad_ladder_before_spark(monkeypatch, tmp_path):
+    """jobs/build_tiers.py checks the cascade straight after parsing
+    --tiers: a bad ladder raises before the job builds its session, so
+    no Spark job (synth, skew report) runs for it."""
+    import runpy
+    import sys
+
+    import pyspark.sql
+
+    class Unbuildable:
+        def __getattr__(self, name):
+            raise AssertionError("session built before the ladder check")
+
+    monkeypatch.setattr(pyspark.sql, "SparkSession", Unbuildable())
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+        monkeypatch.setenv(var, os.environ.get(var, "1"))
+    out = tmp_path / "tiers"
+    job = os.path.join(os.path.dirname(__file__), "..", "jobs", "build_tiers.py")
+    monkeypatch.setattr(
+        sys, "argv",
+        [job, "--synth", "20", "--output", str(out), "--tiers", "t1m:60,t1h:3601"],
+    )
+    with pytest.raises(ValueError, match="t1h bucket 3601 not a multiple"):
+        runpy.run_path(job, run_name="__main__")
+    assert not out.exists()

@@ -14,10 +14,11 @@ from fforma_spark.functions.models import (
     HORIZON_BY_PREFIX,
     forecast_series,
 )
-from fforma_spark.functions.quantile import fqra_fit_predict, qral1_fit
+from fforma_spark.functions.quantile import fqra_fit_predict, qral1_fit_stack
 from fforma_spark.functions.regression_averaging import _ra_batches
 
 from tests.conftest import SF_DIR
+from tests.lqra_oracle import qral1_fit
 
 TAU, N_COMPONENTS, LAMBD, DEFAULT_H = 0.5, 2, 1.0, 8
 
@@ -108,3 +109,81 @@ def test_qra_query_plans_one_python_stage(spark):
     assert df.columns == ["method", "doc_id", "pos", "y_hat"]
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
+
+
+def _stack(rng, h: int, b: int) -> tuple[np.ndarray, np.ndarray]:
+    """b series of horizon h: (b, h, K) forecasts on per-series scales,
+    actuals near their mean; series 0 is constant."""
+    X = rng.random((b, h, len(FORECAST_COLS))) * rng.integers(1, 60, (b, 1, 1))
+    Y = X.mean(axis=2) + rng.normal(0.0, 1.0, (b, h))
+    Y[0] = 7.0
+    return X, Y
+
+
+def _bits(a: np.ndarray) -> np.ndarray:
+    return np.ascontiguousarray(a, dtype=np.float64).view(np.int64)
+
+
+def test_lqra_stack_matches_per_series_oracle_bit_for_bit():
+    """The batched LQRA kernel equals the one-series loop row for row,
+    bit for bit, at every prefix horizon, with no penalty, the query's
+    penalty and a penalty that pins β to equal weights."""
+    rng = np.random.default_rng(5)
+    stacks = [_stack(rng, h, 3) for h in sorted(set(HORIZON_BY_PREFIX.values()))]
+    # a stack where numpy's array sqrt and pow(·, 0.5) round one row's
+    # √(‖X‖₂² + 1e-12) differently, so the step size's power is pinned
+    X, Y = _stack(np.random.default_rng(124), 8, 3)
+    lips = [np.linalg.norm(x, 2) ** 2 + 1e-12 for x in X]
+    assert any(float(v) ** 0.5 != np.sqrt(v) for v in lips)
+    stacks.append((X, Y))
+    for X, Y in stacks:
+        h = X.shape[1]
+        for lambd in (0.0, LAMBD, 1e9):
+            got = qral1_fit_stack(X, Y, TAU, lambd)
+            want = np.stack(
+                [qral1_fit(x, y, TAU, lambd) for x, y in zip(X, Y)]
+            )
+            assert np.array_equal(_bits(got), _bits(want)), (h, lambd)
+
+
+def test_lqra_stack_is_batch_invariant():
+    """A row's weights do not depend on the rest of its stack: one row
+    at a time, the whole stack and the stack in two halves agree bit
+    for bit."""
+    rng = np.random.default_rng(9)
+    for h in (6, 8, 48):
+        X, Y = _stack(rng, h, 5)
+        full = qral1_fit_stack(X, Y, TAU, LAMBD)
+        one = np.concatenate(
+            [qral1_fit_stack(X[i : i + 1], Y[i : i + 1], TAU, LAMBD)
+             for i in range(len(X))]
+        )
+        halves = np.concatenate(
+            [qral1_fit_stack(X[:2], Y[:2], TAU, LAMBD),
+             qral1_fit_stack(X[2:], Y[2:], TAU, LAMBD)]
+        )
+        assert np.array_equal(_bits(full), _bits(one)), h
+        assert np.array_equal(_bits(full), _bits(halves)), h
+
+
+def test_one_pass_matches_recipe_across_prefix_horizons():
+    """One Arrow batch holding docs of every prefix (horizons 6, 8, 13,
+    14, 18, 48 and the default) makes one LQRA stack per horizon; its
+    rows still equal the per-doc recipe bit for bit."""
+    rng = np.random.default_rng(13)
+    docs = {}
+    for prefix in "HDWMQYS1":
+        h = HORIZON_BY_PREFIX.get(prefix, DEFAULT_H)
+        s = SEASONALITY_BY_PREFIX.get(prefix, 1)
+        for i, n in enumerate((2 * s + 2 * h + 5, 3 * s + 2 * h + 11)):
+            docs[f"{prefix}{i}"] = rng.integers(1, 12, n)
+    pdf = pd.DataFrame(
+        {
+            "doc_id": list(docs),
+            "tokens": [np.asarray(t, np.int32) for t in docs.values()],
+        }
+    )
+    (got,) = _ra_batches(iter([pdf]), TAU, N_COMPONENTS, LAMBD, DEFAULT_H)
+    want = _recipe(pdf)
+    assert got["doc_id"].tolist() == want["doc_id"].tolist()
+    assert np.array_equal(_bits(got["y_hat"]), _bits(want["y_hat"]))
