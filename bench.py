@@ -1,28 +1,25 @@
 #!/usr/bin/env python
 """Benchmark harness for the fforma_spark engine.
 
-Default mode (what the driver runs): execute the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+Executes the five headline queries (rollup cascade, LOCF gap fill, T0
+features, compressed blocks, ensemble rollup) at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 tables, see SF_DIR) on $SPARK_GRAFT_BENCH_MASTER (default
+local[$SPARK_GRAFT_CPUS]), best of $SPARK_GRAFT_BENCH_REPS (default 3)
+per query, and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": ...,
-     "points_per_sec": ..., "comp_bytes_per_sec": ...}
+     "queries": {"q1": sec, ...}, "rep_times": {...}, "sf": ...,
+     "points_per_sec": ..., "comp_bytes_per_sec": ...,
+     "counters": {...}, "plan_fingerprints": {...}, ...}
 
-Scaling mode (north_rule evidence, no real cluster in the sandbox):
-``python bench.py --scaling`` re-runs the identical job in TWO fresh
-subprocesses at local[8] and local[32] on the same input and reports
-throughput at both plus scaling efficiency
-(= speedup / (32/8)); results land in BENCH_SCALING.json and stderr.
+Usage: python bench.py
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -225,269 +222,6 @@ def run_bench(master: str) -> dict:
     }
 
 
-def run_scaling() -> dict:
-    """North-rule scaling evidence: the SAME production job
-    (jobs/build_tiers.py via spark-submit --py-files, tier cascade +
-    compression + feature kernels) on the SAME deterministic input at
-    N=8 and 4N=32 cores. Efficiency = speedup / 4.
-
-    Input size (SPARK_GRAFT_SCALE_DOCS, default 400000 docs ≈ 82M
-    points) is chosen so compute dominates fixed job overhead — the
-    sandbox stand-in for the two-cluster-size criterion.
-    """
-    import shutil
-    import zipfile
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    n_docs = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "400000"))
-    zpath = "/tmp/fforma_spark_scaling.zip"
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(os.path.join(repo, "fforma_spark")):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    z.write(full, os.path.relpath(full, repo))
-    import pyspark
-
-    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
-
-    # Prep (untimed): materialize the input sequences table ONCE —
-    # both parallelism levels then run the identical job over the
-    # identical stored table (the north-rule input is a stored
-    # Iceberg/parquet table, not an on-the-fly generator).
-    input_dir = f"/tmp/scaling_input_{n_docs}"
-    if not os.path.exists(os.path.join(input_dir, "_SUCCESS")):
-        shutil.rmtree(input_dir, ignore_errors=True)
-        prep = (
-            "import sys; sys.path.insert(0, %r)\n"
-            "from fforma_spark.session import get_spark, warm_python_workers\n"
-            "from fforma_spark.sources.synth import synth_sequences\n"
-            "spark = get_spark('scaling_prep')\n"
-            "warm_python_workers(spark)\n"
-            "synth_sequences(spark, %d, 42, partitions=64).write.mode('overwrite').parquet(%r)\n"
-            "spark.stop()\n" % (repo, n_docs, input_dir)
-        )
-        subprocess.run([sys.executable, "-c", prep], check=True,
-                       capture_output=True)
-
-    results = {}
-    n_trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "3"))
-    # interleave 8,32,8,32,... so slow VM phases hit both configs
-    # equally; keep the best leg per config
-    for _trial in range(n_trials):
-        for n in (8, 32):
-            out_dir = f"/tmp/scaling_tiers_{n}"
-            shutil.rmtree(out_dir, ignore_errors=True)
-            time.sleep(20)  # let the kernel finish tearing down the
-            # previous leg's pre-touched heap before timing the next
-            proc = subprocess.run(
-                [
-                    submit,
-                    "--master",
-                    f"local[{n}]",
-                    "--conf", "spark.sql.shuffle.partitions=%d" % n,
-                    "--conf", "spark.sql.adaptive.enabled=true",
-                    "--conf", "spark.driver.memory=8g",
-                    "--conf", "spark.ui.enabled=false",
-                    # see fforma_spark.session: mmap_lock mitigation
-                    "--conf",
-                    "spark.driver.extraJavaOptions=-Xms8g -XX:+AlwaysPreTouch -XX:+UseParallelGC",
-                    "--conf", "spark.storage.memoryMapThreshold=2g",
-                    "--py-files",
-                    zpath,
-                    os.path.join(repo, "jobs", "build_tiers.py"),
-                    "--input",
-                    input_dir,
-                    "--output",
-                    out_dir,
-                    "--compress",
-                    "--features",
-                ],
-                capture_output=True,
-                text=True,
-                check=True,
-            )
-            r = json.loads(proc.stdout.strip().splitlines()[-1])
-            if n not in results or r["value"] < results[n]["value"]:
-                results[n] = r
-    t8, t32 = results[8]["value"], results[32]["value"]
-    speedup = t8 / t32
-    eff = speedup / (32 / 8)
-    report = {
-        "job": "jobs/build_tiers.py --input <stored %d-doc sequences parquet> "
-               "--compress --features" % n_docs,
-        "local8_sec": t8,
-        "local32_sec": t32,
-        "local8_points_per_sec": results[8]["points_per_sec"],
-        "local32_points_per_sec": results[32]["points_per_sec"],
-        "local8_comp_bytes_per_sec": results[8]["compress"]["bytes_per_sec"],
-        "local32_comp_bytes_per_sec": results[32]["compress"]["bytes_per_sec"],
-        "speedup_8_to_32": round(speedup, 3),
-        "scaling_efficiency": round(eff, 3),
-        "detail": {str(k): v for k, v in results.items()},
-    }
-    with open(os.path.join(repo, "BENCH_SCALING.json"), "w") as f:
-        json.dump(report, f, indent=2)
-    return report
-
-
-#: the batched host-calibration probe's clean-window throughput band
-#: on this box (BASELINE.md: 2.65–3.44×, median 2.93; the corrupted
-#: round-4 window read 1.77×). A bracket outside the band means a
-#: neighbor-VM memory/disk burst is in progress and the reading would
-#: need judge adjudication — retry instead (VERDICT r4 #2).
-PROBE_BAND = tuple(
-    float(x)
-    for x in os.environ.get("SPARK_GRAFT_PROBE_BAND", "2.55,3.7").split(",")
-)
-
-
-def _probe() -> dict:
-    repo = os.path.dirname(os.path.abspath(__file__))
-    try:
-        proc = subprocess.run(
-            [sys.executable,
-             os.path.join(repo, "scripts", "host_calibration.py"),
-             "--batched"],
-            capture_output=True, text=True, check=True,
-        )
-        full = json.loads(proc.stdout.strip().splitlines()[-1])
-    except Exception as exc:  # noqa: BLE001 — a dead probe must not
-        # kill the bench: treat it as an out-of-band window so the
-        # retry / forced-run paths still guarantee ONE JSON line
-        return {"in_band": False, "error": repr(exc)[:200]}
-    r = full["throughput_speedup_8_to_32"]
-    return {
-        "throughput_speedup_8_to_32": r,
-        "throughput_efficiency": full["throughput_efficiency"],
-        "in_band": PROBE_BAND[0] <= r <= PROBE_BAND[1],
-    }
-
-
-#: processes in the probe's widest leg (host_calibration.py runs local[8]
-#: then local[32]); PROBE_BAND was calibrated on a host with at least
-#: that many cores, and a host with fewer cannot reach it
-PROBE_PROCS = 32
-
-
-def _bench_once() -> tuple[subprocess.CompletedProcess, str | None]:
-    """Run ``bench.py --once`` in a subprocess; return it and its last
-    JSON line (None when it printed none)."""
-    repo = os.path.dirname(os.path.abspath(__file__))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "bench.py"), "--once"],
-        capture_output=True, text=True,
-    )
-    line = next(
-        (
-            ln for ln in reversed(proc.stdout.strip().splitlines())
-            if ln.startswith("{")
-        ),
-        None,
-    )
-    return proc, line
-
-
-def _forced_run() -> dict:
-    """One ungated ``--once`` run; raises if it printed no JSON line."""
-    proc, line = _bench_once()
-    if proc.returncode != 0 or line is None:
-        sys.stderr.write(proc.stderr[-4000:])
-        raise RuntimeError(
-            "bench subprocess produced no JSON line (forced run rc=%d)"
-            % proc.returncode
-        )
-    return json.loads(line)
-
-
-def run_gated() -> dict:
-    """Probe-gated headline bench (VERDICT r4 #2): bracket each bench
-    subprocess with the same `host_calibration.py --batched` probe the
-    scaling legs use; accept the first attempt whose BOTH brackets sit
-    in the clean-window band, retrying up to
-    $SPARK_GRAFT_BENCH_ATTEMPTS (default 3) times. If no attempt lands
-    in a clean window, report the best-value attempt with
-    ``in_band: false`` — the flags plus the per-query plan
-    fingerprints make any residual drift adjudicable from the JSON
-    alone.
-
-    On a host with fewer than PROBE_PROCS cores the band is out of
-    reach: the probes are skipped, the bench runs once and the gate
-    records ``skipped`` with the reason and the core count."""
-    cpus = default_cpus()
-    if cpus < PROBE_PROCS:
-        accepted = _forced_run()
-        accepted["probe_gate"] = {
-            "skipped": True,
-            "reason": f"host has {cpus} cores, the probe's widest leg "
-            f"runs {PROBE_PROCS} processes: its band is out of reach",
-            "cpus": cpus,
-        }
-        return accepted
-    attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3"))
-    tried = []
-    accepted = None
-    for i in range(attempts):
-        pre = _probe()
-        if not pre["in_band"]:
-            tried.append({"attempt": i + 1, "pre": pre, "skipped": True})
-            time.sleep(30)
-            continue
-        proc, line = _bench_once()
-        if proc.returncode != 0 or line is None:
-            # a transiently-dead subprocess is a failed ATTEMPT, not a
-            # dead bench — record it and retry; the forced fallback
-            # below still raises if no attempt ever produces a line
-            sys.stderr.write(proc.stderr[-4000:])
-            tried.append({
-                "attempt": i + 1, "pre": pre, "failed": True,
-                "returncode": proc.returncode,
-            })
-            time.sleep(30)
-            continue
-        result = json.loads(line)
-        post = _probe()
-        tried.append({
-            "attempt": i + 1,
-            "pre": pre,
-            "post": post,
-            "value": result["value"],
-            "_full": result,
-        })
-        if post["in_band"]:
-            accepted = result
-            break
-    if accepted is None:
-        # no clean window found — report the best attempt, flagged
-        runs = [t for t in tried if "_full" in t]
-        if not runs:
-            # every pre-probe was out of band; run once anyway so the
-            # driver always gets a bench line, flag it
-            accepted = _forced_run()
-            tried.append({"attempt": "forced", "value": accepted["value"]})
-        else:
-            accepted = min(runs, key=lambda t: t["value"])["_full"]
-    for t in tried:
-        t.pop("_full", None)
-    gate = {
-        "band": list(PROBE_BAND),
-        "attempts": tried,
-        "in_band": bool(
-            tried
-            and tried[-1].get("pre", {}).get("in_band")
-            and tried[-1].get("post", {}).get("in_band")
-        ),
-    }
-    accepted["probe_gate"] = gate
-    return accepted
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        rep = run_scaling()
-        print(json.dumps(rep))
-    elif "--once" in sys.argv:
-        master = os.environ.get("SPARK_GRAFT_BENCH_MASTER", f"local[{CPUS}]")
-        print(json.dumps(run_bench(master)))
-    else:
-        print(json.dumps(run_gated()))
+    master = os.environ.get("SPARK_GRAFT_BENCH_MASTER", f"local[{CPUS}]")
+    print(json.dumps(run_bench(master)))

@@ -282,11 +282,16 @@ def tsb_matrix(Y: np.ndarray, h: int) -> np.ndarray:
         zfit[:, :, i] = zfit[:, :, i - 1] + b_grid * (
             Y[:, i, None] - zfit[:, :, i - 1]
         )
-    shifted = np.concatenate(
-        [np.full((B, g, 1), np.nan), zfit[:, :, :-1]], axis=2
-    )
-    mse = np.nanmean((shifted - Y[:, None, :]) ** 2, axis=2)
-    best = np.argmin(mse, axis=1)
+    if n == 1:
+        # no one-step-ahead fit to score: keep the first beta, the one
+        # argmin picks when every MSE is NaN
+        best = np.zeros(B, dtype=np.intp)
+    else:
+        shifted = np.concatenate(
+            [np.full((B, g, 1), np.nan), zfit[:, :, :-1]], axis=2
+        )
+        mse = np.nanmean((shifted - Y[:, None, :]) ** 2, axis=2)
+        best = np.argmin(mse, axis=1)
     fc = zfit[np.arange(B), best, -1]
     return np.repeat(fc[:, None], h, axis=1)
 

@@ -347,6 +347,10 @@ def tsb(y: np.ndarray, h: int) -> np.ndarray:
             zfit[:, i] = zfit[:, i - 1] + bb * (y[i] - zfit[:, i - 1])
     yfit = pfit * zfit
     fc = yfit[:, -1]
+    if n == 1:
+        # no one-step-ahead fit to score: keep the first grid point, the
+        # one argmin picks when every MSE is NaN
+        return np.full(h, fc[0])
     shifted = np.concatenate([np.full((g, 1), np.nan), yfit[:, :-1]], axis=1)
     mse_g = np.nanmean((shifted - y) ** 2, axis=1)
     return np.full(h, fc[int(np.argmin(mse_g))])

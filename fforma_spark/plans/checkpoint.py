@@ -96,29 +96,14 @@ def _write_tier(
     # pass that writes the data (spark_partition_id is the write-side
     # partition) and read back from the written files' footers
     tagged = df.withColumn("_pid", F.spark_partition_id())
-    # format-pluggable: parquet dir, or Iceberg writeTo when
-    # FFORMA_SPARK_ICEBERG_CATALOG is set (SCALE.md §1 partition spec)
-    from fforma_spark.sources.tables import write_output
-
-    target = write_output(tagged, path, table_name=f"tier_{tier.name}")
-    if target == path:
-        counts = _footer_lineage(path)
-        nbytes = _dir_bytes(path)
-    else:  # pragma: no cover — needs an Iceberg runtime jar
-        counts = {
-            r["_pid"]: r["count"]
-            for r in df.sparkSession.read.table(target)
-            .groupBy("_pid")
-            .count()
-            .collect()
-        }
-        nbytes = None
+    tagged.write.mode("overwrite").parquet(path)
+    counts = _footer_lineage(path)
     manifest = {
         "tier": asdict(tier),
         "fingerprint": fingerprint,
         "source_tier": source_tier,
         "rows": sum(counts.values()),
-        "bytes": nbytes,
+        "bytes": _dir_bytes(path),
         "partitions": [
             {"partition_id": pid, "rows": counts[pid]}
             for pid in sorted(counts)
@@ -191,7 +176,16 @@ def materialize_ladder(
     previously persisted ones (marked "resumed": True). Each tier
     derives from the previous one, so the whole cascade's bucket
     widths are checked (:func:`check_ladder`) before the first write.
+
+    The ladder is parquet-only: its manifests, lineage and resume live
+    under ``base_dir``, so with ``FFORMA_SPARK_ICEBERG_CATALOG`` set it
+    raises ValueError before writing anything.
     """
+    if os.environ.get("FFORMA_SPARK_ICEBERG_CATALOG"):
+        raise ValueError(
+            "materialize_ladder writes parquet tiers under base_dir only; "
+            "unset FFORMA_SPARK_ICEBERG_CATALOG to build the tier ladder"
+        )
     check_ladder(tiers)
     spark = panel.sparkSession
     results: dict[str, dict] = {}

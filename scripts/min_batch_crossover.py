@@ -9,8 +9,8 @@ round 5 they were asserted (3, 20), not measured. This script times
 both paths on identical synthetic groups (the engine's own Philox
 series, truncated/tiled to each length), best-of-R, and prints one
 JSON line per cell plus a recommendation. Pure numpy — no Spark, no
-JVM — so a clean window only needs a quiet CPU; run it bracketed by
-scripts/host_calibration.py like any other timing evidence.
+JVM — so a clean window only needs a quiet CPU: run it on an otherwise
+idle host.
 
 Usage: python scripts/min_batch_crossover.py [--reps 5]
 """

@@ -317,6 +317,18 @@ def test_manifest_without_schema_is_incomplete(spark, panel, tmp_path):
     assert not again["t1"].get("resumed") and "schema" in again["t1"]
 
 
+def test_ladder_refuses_a_catalog_before_writing(panel, tmp_path, monkeypatch):
+    """The ladder's manifests, lineage and resume are parquet files
+    under base_dir, so with an Iceberg catalog configured it raises
+    before any tier is written."""
+    monkeypatch.setenv("FFORMA_SPARK_ICEBERG_CATALOG", "icecat.db")
+    base = tmp_path / "tiers"
+    base.mkdir()
+    with pytest.raises(ValueError, match="FFORMA_SPARK_ICEBERG_CATALOG"):
+        materialize_ladder(panel, str(base), TIERS, fingerprint="fp1")
+    assert list(base.rglob("*")) == []
+
+
 def test_footer_lineage_rejects_a_row_group_of_two_partitions(tmp_path):
     """Lineage is read from each row group's _pid statistics; a row
     group holding two partitions' rows cannot be attributed and

@@ -22,20 +22,46 @@ from fforma_spark.functions.compress import (
 )
 
 I32 = st.integers(min_value=-(2**31), max_value=2**31 - 1)
-I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+
+
+#: one splice into the generated rows: (row, column, int64 boundary
+#: value), or no splice when the value is None
+SPLICE = st.tuples(
+    st.integers(min_value=0, max_value=7),
+    st.integers(min_value=0, max_value=599),
+    st.sampled_from(
+        [None, -(2**63), -(2**63) + 1, -1, 0, 1, 2**63 - 2, 2**63 - 1]
+    ),
+)
+
+
+def _int64_rows(seed: int, b: int, n: int) -> np.ndarray:
+    """(b, n) int64 rows from a Philox stream: full-range draws, each
+    row arithmetic-shifted by its own 0..63 bits, so the rows span every
+    delta-of-delta bit width from the full int64 range down to {-1, 0}."""
+    rng = np.random.Generator(np.random.Philox(seed))
+    raw = rng.integers(
+        -(2**63), 2**63 - 1, size=(b, n), dtype=np.int64, endpoint=True
+    )
+    return raw >> rng.integers(0, 64, size=(b, 1))
 
 
 @settings(max_examples=200, deadline=None)
 @given(
     st.integers(min_value=1, max_value=8),
     st.integers(min_value=3, max_value=600),
-    st.data(),
+    st.integers(min_value=0, max_value=2**64 - 1),
+    # a fixed-size tuple, not st.lists: lists make Hypothesis discard
+    # some examples as invalid
+    st.tuples(*[SPLICE] * 8),
 )
-def test_dod_matrix_parity_any_int64(b, n, data):
-    rows = [
-        data.draw(st.lists(I64, min_size=n, max_size=n)) for _ in range(b)
-    ]
-    X = np.asarray(rows, dtype=np.int64)
+def test_dod_matrix_parity_any_int64(b, n, seed, splices):
+    # Hypothesis draws only the shape, the seed and the splices, so an
+    # example stays a few dozen bytes at any (b, n)
+    X = _int64_rows(seed, b, n)
+    for i, j, v in splices:
+        if v is not None:
+            X[i % b, j % n] = v
     assert dod_encode_matrix(X) == [dod_encode(r) for r in X]
 
 

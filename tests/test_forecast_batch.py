@@ -173,6 +173,23 @@ def test_tsb_matrix_matches_scalar():
             assert np.array_equal(got[i], want), f"n={n} row={i}"
 
 
+def test_tsb_one_point_train_is_silent_and_first_grid_point():
+    """A one-point train series (n_tok == h + 1) has no one-step-ahead
+    fit to score, so both TSB paths keep the first grid point without
+    averaging an empty slice: the forecast is the single value."""
+    import warnings
+
+    vals = np.array([1.0, 7.0, 0.1, 1e-300, 3.3e12, np.pi])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = tsb_matrix(vals[:, None], 8)
+        for i, v in enumerate(vals):
+            want = np.full(8, v)
+            assert got[i].tobytes() == want.tobytes()
+            assert K.tsb(np.array([v]), 8).tobytes() == want.tobytes()
+        assert K.tsb(np.array([0.0]), 3).tobytes() == np.zeros(3).tobytes()
+
+
 def test_tsb_matrix_rejects_non_positive_rows():
     Y = np.ones((3, 6))
     Y[1, 2] = 0.0
