@@ -15,65 +15,18 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from fforma_spark.queries import ORACLES, QUERIES, flagship  # noqa: E402
-
-_REPO = os.path.dirname(os.path.abspath(__file__))
-
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship the fforma_spark package to executor Python workers.
-
-    Equivalent to ``spark-submit --py-files``: the driver process may
-    import this module from any cwd, but pandas-UDF workers need the
-    package importable too. The zip is named by a content fingerprint
-    (md5 of every .py's bytes) so editing any source invalidates it —
-    a fixed name would let executors silently run stale kernel code.
-    Written atomically (temp file + os.rename) so a concurrent driver
-    never addPyFiles a partial zip.
-    """
-    import hashlib
-    import tempfile
-    import zipfile
-
-    pkg = os.path.join(_REPO, "fforma_spark")
-    sources = []
-    for root, _dirs, files in os.walk(pkg):
-        for fn in sorted(files):
-            if fn.endswith(".py"):
-                sources.append(os.path.join(root, fn))
-    sources.sort()
-    dig = hashlib.md5()
-    for full in sources:
-        dig.update(os.path.relpath(full, _REPO).encode())
-        with open(full, "rb") as f:
-            dig.update(f.read())
-    zpath = os.path.join("/tmp", f"fforma_spark_pkg_{dig.hexdigest()[:12]}.zip")
-    if not os.path.exists(zpath):
-        fd, tmp = tempfile.mkstemp(suffix=".zip", dir="/tmp")
-        os.close(fd)
-        with zipfile.ZipFile(tmp, "w") as z:
-            for full in sources:
-                z.write(full, os.path.relpath(full, _REPO))
-        os.rename(tmp, zpath)
-    try:
-        spark.sparkContext.addPyFile(zpath)
-    except Exception as exc:  # noqa: BLE001
-        # addPyFile raises only for a same-name re-add with different
-        # contents; same-name same-content is a no-op. The fingerprint
-        # name makes re-adds identical, so anything else is a genuine
-        # shipping failure worth surfacing.
-        if "already" not in str(exc).lower():
-            raise
+from fforma_spark.session import ship_package  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    _ensure_shipped(spark)
+    ship_package(spark)
     return flagship(spark, "/root/testdata/sf0.001")
 
 
 def _wrap(fn: Callable[[SparkSession, str], DataFrame]):
     def inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         return fn(spark, sf_dir)
 
     return inner

@@ -46,13 +46,20 @@ def run_bench(master: str) -> dict:
     from fforma_spark.functions.metrics import evaluate_models
     from fforma_spark.functions.models import base_forecasts, holdout_truth
     from fforma_spark.operators.gapfill import locf_fill
-    from fforma_spark.session import get_spark, warm_python_workers
+    from fforma_spark.session import (
+        get_spark,
+        ship_package,
+        warm_python_workers,
+    )
     from fforma_spark.sources.tables import (
         panel_from_events,
         sequences_from_documents,
     )
 
     spark = get_spark("fforma_spark_bench", master=master)
+    # the workers import the package from the shipped zip, not from the
+    # driver's sys.path, so bench.py runs from any directory
+    ship_package(spark)
     warm_python_workers(spark)
     timings: dict[str, float] = {}
     all_times: dict[str, list[float]] = {}

@@ -11,3 +11,7 @@ Canonical input table (BASELINE input_hint):
 """
 
 __version__ = "0.1.0"
+
+from fforma_spark import zipcache as _zipcache
+
+_zipcache.install()

@@ -154,7 +154,16 @@ def read_tier(spark: SparkSession, base_dir: str, tier: TierSpec) -> DataFrame:
 
 def check_ladder(tiers: tuple[TierSpec, ...]) -> None:
     """Each tier rolls up from the one before it, so every bucket must
-    be a multiple of the previous tier's; raises ValueError otherwise."""
+    be a multiple of the previous tier's; raises ValueError otherwise.
+
+    The ladder is parquet-only: its manifests, lineage and resume live
+    under its base directory, so it also raises ValueError when
+    ``FFORMA_SPARK_ICEBERG_CATALOG`` is set."""
+    if os.environ.get("FFORMA_SPARK_ICEBERG_CATALOG"):
+        raise ValueError(
+            "the tier ladder writes parquet tiers under base_dir only; "
+            "unset FFORMA_SPARK_ICEBERG_CATALOG to build it"
+        )
     for fine, coarse in zip(tiers, tiers[1:]):
         if coarse.bucket % fine.bucket != 0:
             raise ValueError(
@@ -174,18 +183,10 @@ def materialize_ladder(
 
     Returns {tier_name: manifest}; manifests of skipped tiers are the
     previously persisted ones (marked "resumed": True). Each tier
-    derives from the previous one, so the whole cascade's bucket
-    widths are checked (:func:`check_ladder`) before the first write.
-
-    The ladder is parquet-only: its manifests, lineage and resume live
-    under ``base_dir``, so with ``FFORMA_SPARK_ICEBERG_CATALOG`` set it
-    raises ValueError before writing anything.
+    derives from the previous one, so the whole cascade is checked
+    (:func:`check_ladder`: bucket widths, no Iceberg catalog) before the
+    first write.
     """
-    if os.environ.get("FFORMA_SPARK_ICEBERG_CATALOG"):
-        raise ValueError(
-            "materialize_ladder writes parquet tiers under base_dir only; "
-            "unset FFORMA_SPARK_ICEBERG_CATALOG to build the tier ladder"
-        )
     check_ladder(tiers)
     spark = panel.sparkSession
     results: dict[str, dict] = {}

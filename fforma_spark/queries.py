@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from fforma_spark.operators.gapfill import locf_fill, locf_fill_sql
 from fforma_spark.operators.reshape import explode_panel
@@ -360,11 +360,19 @@ _SQL_EVAL = f"""
 """
 
 
+def _smape_agg(m: str) -> Column:
+    """Per-series sMAPE of ``<m>_forec`` against ``y`` (masked-invalid,
+    metrics.py:117-148), as an aggregate over a truth ⋈ fc frame."""
+    e = F.abs(F.col("y") - F.col(f"{m}_forec"))
+    sc = F.abs(F.col("y")) + F.abs(F.col(f"{m}_forec"))
+    return stable_round6(200 * F.avg(F.when(sc != 0, e / sc))).alias(f"{m}_smape")
+
+
 def _eval_events(
     train: DataFrame, truth: DataFrame, fc: DataFrame
 ) -> DataFrame:
-    """Per-series sMAPE (masked-invalid, metrics.py:117-148) and MASE
-    (:150-180) of the closed-form models, Catalyst aggregates only."""
+    """Per-series sMAPE (:func:`_smape_agg`) and MASE (metrics.py:150-180)
+    of the closed-form models, Catalyst aggregates only."""
     from fforma_spark.functions.metrics import mase_scale
 
     scale = mase_scale(train.select("doc_id", "pos", "val"), F.lit(_S))
@@ -372,12 +380,7 @@ def _eval_events(
     aggs = []
     for m in ["naive", "snaive"]:
         e = F.abs(F.col("y") - F.col(f"{m}_forec"))
-        sc = F.abs(F.col("y")) + F.abs(F.col(f"{m}_forec"))
-        aggs.append(
-            stable_round6(200 * F.avg(F.when(sc != 0, e / sc))).alias(
-                f"{m}_smape"
-            )
-        )
+        aggs.append(_smape_agg(m))
         aggs.append(
             stable_round6(
                 F.try_divide(100 * F.avg(e), F.first("mase_scale"))).alias(f"{m}_mase")
@@ -425,22 +428,22 @@ def ensembles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted rollup y_hat = Σ w·pred (_XGBoost.py:149-161) — a
     broadcast join of the 1-row-per-series weight table onto the
     prediction panel."""
-    from fforma_spark.functions.ensemble import softmin_weights, weighted_rollup
+    from fforma_spark.functions.ensemble import softmin_weights
 
-    train, truth, fc = _events_split(spark, sf_dir)
-    ev = _eval_events(train, truth, fc)
-    w = softmin_weights(
-        ev.select("doc_id", "naive_smape", "snaive_smape"),
-        ["naive_smape", "snaive_smape"],
+    _, truth, fc = _events_split(spark, sf_dir)
+    # the weights need only the sMAPE: every doc past the cutoff filter
+    # has a lag-_S pair, so the MASE scale's self-join would drop none
+    joined = truth.join(fc, ["doc_id", "pos"])
+    sm = joined.groupBy("doc_id").agg(_smape_agg("naive"), _smape_agg("snaive"))
+    w = softmin_weights(sm, ["naive_smape", "snaive_smape"])
+    # the sum weighted_rollup forms, term for term
+    soft = (
+        F.lit(0.0)
+        + F.col("w_naive_smape") * F.col("naive_forec")
+        + F.col("w_snaive_smape") * F.col("snaive_forec")
     )
-    soft = weighted_rollup(
-        fc,
-        w,
-        ["naive_forec", "snaive_forec"],
-        ["naive_smape", "snaive_smape"],
-    ).select("doc_id", "pos", F.col("y_hat").alias("y_softmin"))
     s = sum((F.col(c) for c in _FC4), F.lit(0.0))
-    mm = fc.select(
+    return fc.join(F.broadcast(w), "doc_id").select(
         "doc_id",
         "pos",
         stable_round6(s / 4).alias("y_mean"),
@@ -452,10 +455,7 @@ def ensembles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             / 2
         ).alias("y_median"),
-    )
-    return mm.join(soft, ["doc_id", "pos"]).select(
-        "doc_id", "pos", "y_mean", "y_median",
-        stable_round6("y_softmin").alias("y_softmin"),
+        stable_round6(soft).alias("y_softmin"),
     )
 
 

@@ -67,47 +67,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def write_output(
-    df: DataFrame,
-    parquet_path: str,
-    table_name: str | None = None,
-    doc_buckets: int = 65536,
-    secondary: str | None = None,
-) -> str:
-    """Format-pluggable sink, the write-side twin of :func:`load_table`.
-
-    Default: overwrite a parquet directory. When
-    ``FFORMA_SPARK_ICEBERG_CATALOG`` is set and a ``table_name`` is
-    given, write via the V2 ``writeTo`` API with the SCALE.md §1
-    partition spec — ``bucket(doc_buckets, doc_id)`` plus an optional
-    secondary partition column — and doc_id sort within partitions
-    (Iceberg min/max pruning on doc ranges). Returns the path or the
-    fully-qualified table written.
-
-    No Iceberg jar ships in the sandbox: the branch selection and the
-    partition-transform construction are exercised by
-    tests/test_iceberg_gate.py; the full round-trip runs wherever a
-    runtime jar is on the classpath.
-    """
-    catalog = os.environ.get("FFORMA_SPARK_ICEBERG_CATALOG")
-    if catalog and table_name:
-        from pyspark.sql.functions import partitioning
-
-        parts = [partitioning.bucket(doc_buckets, "doc_id")]
-        if secondary is not None:
-            parts.append(F.col(secondary))
-        target = f"{catalog}.{table_name}"
-        (
-            df.sortWithinPartitions("doc_id")
-            .writeTo(target)
-            .partitionedBy(*parts)
-            .createOrReplace()
-        )
-        return target
-    df.write.mode("overwrite").parquet(parquet_path)
-    return parquet_path
-
-
 def sequences_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic tokenization of ``documents`` into the canonical
     sequence table (doc_id, tokens:array<int>, n_tok, source).

@@ -86,7 +86,8 @@ def main() -> None:
         TierSpec(name, int(bucket))
         for name, bucket in (t.split(":") for t in args.tiers.split(","))
     )
-    # a ladder that does not cascade fails before any Spark work
+    # a ladder that does not cascade, or a configured Iceberg catalog the
+    # parquet-only ladder cannot write to, fails before any Spark work
     check_ladder(tiers)
 
     spark = (

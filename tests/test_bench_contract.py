@@ -29,15 +29,10 @@ HEADLINE_KEYS = {
 
 
 def test_bench_prints_one_headline_json_line(tmp_path):
-    # bench.py puts the checkout on its own sys.path only; run from
-    # another directory, the Python workers find the package through
-    # PYTHONPATH
-    pythonpath = os.pathsep.join(
-        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
-    )
+    # run from another directory with the inherited PYTHONPATH: the
+    # Python workers find the package only through the zip bench.py ships
     env = {
         **os.environ,
-        "PYTHONPATH": pythonpath,
         "SPARK_GRAFT_SF_DIR": SF_DIR,
         "SPARK_GRAFT_BENCH_REPS": "1",
         "SPARK_GRAFT_CPUS": "2",

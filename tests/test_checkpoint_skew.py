@@ -352,10 +352,10 @@ def test_footer_lineage_rejects_a_row_group_of_two_partitions(tmp_path):
         _footer_lineage(str(tmp_path))
 
 
-def test_build_tiers_job_rejects_bad_ladder_before_spark(monkeypatch, tmp_path):
-    """jobs/build_tiers.py checks the cascade straight after parsing
-    --tiers: a bad ladder raises before the job builds its session, so
-    no Spark job (synth, skew report) runs for it."""
+def _run_build_tiers_without_session(monkeypatch, tmp_path, tiers: str):
+    """Run jobs/build_tiers.py with --tiers ``tiers`` and its output
+    under ``tmp_path/tiers``, where touching any SparkSession attribute
+    fails."""
     import runpy
     import sys
 
@@ -371,9 +371,24 @@ def test_build_tiers_job_rejects_bad_ladder_before_spark(monkeypatch, tmp_path):
     out = tmp_path / "tiers"
     job = os.path.join(os.path.dirname(__file__), "..", "jobs", "build_tiers.py")
     monkeypatch.setattr(
-        sys, "argv",
-        [job, "--synth", "20", "--output", str(out), "--tiers", "t1m:60,t1h:3601"],
+        sys, "argv", [job, "--synth", "20", "--output", str(out), "--tiers", tiers]
     )
+    runpy.run_path(job, run_name="__main__")
+
+
+def test_build_tiers_job_rejects_bad_ladder_before_spark(monkeypatch, tmp_path):
+    """jobs/build_tiers.py checks the cascade straight after parsing
+    --tiers: a bad ladder raises before the job builds its session, so
+    no Spark job (synth, skew report) runs for it."""
     with pytest.raises(ValueError, match="t1h bucket 3601 not a multiple"):
-        runpy.run_path(job, run_name="__main__")
-    assert not out.exists()
+        _run_build_tiers_without_session(monkeypatch, tmp_path, "t1m:60,t1h:3601")
+    assert not (tmp_path / "tiers").exists()
+
+
+def test_build_tiers_job_rejects_a_catalog_before_spark(monkeypatch, tmp_path):
+    """With FFORMA_SPARK_ICEBERG_CATALOG set the parquet-only ladder is
+    refused by the same check, before the job builds its session."""
+    monkeypatch.setenv("FFORMA_SPARK_ICEBERG_CATALOG", "icecat.db")
+    with pytest.raises(ValueError, match="FFORMA_SPARK_ICEBERG_CATALOG"):
+        _run_build_tiers_without_session(monkeypatch, tmp_path, "t1m:60,t1h:3600")
+    assert not (tmp_path / "tiers").exists()

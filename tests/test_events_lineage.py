@@ -14,7 +14,7 @@ from tests.conftest import SF_DIR
 MAX_RELATIONS = {
     "forecasts_sql_events": 1,
     "eval_metrics_events": 4,
-    "ensembles_events": 6,
+    "ensembles_events": 3,
     "bestmodel_wins_events": 4,
     "quantile_eval_events": 4,
     "pooled_eval_events": 2,

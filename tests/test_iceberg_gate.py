@@ -1,19 +1,13 @@
-"""The Iceberg-gated IO path is config plumbing that must actually
-execute, not dead code: these tests drive the branch selection with the
-env var set (no jar in the sandbox — the attempt must reach Spark's
-catalog resolution and fail THERE, proving writeTo/read.table ran with
-the right target and partition spec), and the full round-trip test
-runs wherever an Iceberg runtime jar is on the classpath."""
+"""The Iceberg-gated read path is config plumbing that must actually
+execute, not dead code: with the env var set (no jar in the sandbox),
+``load_table`` must reach Spark's catalog resolution and fail THERE,
+proving read.table ran with the right target."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from pyspark.sql import functions as F
-
-from fforma_spark.sources.tables import load_table, write_output
+from fforma_spark.sources.tables import load_table
 
 
 def _iceberg_jar_present(spark) -> bool:
@@ -26,59 +20,10 @@ def _iceberg_jar_present(spark) -> bool:
         return False
 
 
-def _tiny(spark):
-    return spark.createDataFrame(
-        [("1", 3, "s"), ("2", 5, "s")], "doc_id string, n_tok int, source string"
-    )
-
-
-def test_write_output_parquet_default(spark, tmp_path):
-    """Without the env var, write_output is a plain parquet overwrite
-    (table_name ignored)."""
-    os.environ.pop("FFORMA_SPARK_ICEBERG_CATALOG", None)
-    path = str(tmp_path / "out")
-    got = write_output(_tiny(spark), path, table_name="t1m")
-    assert got == path
-    assert spark.read.parquet(path).count() == 2
-
-
-def test_write_output_selects_iceberg_branch(spark, tmp_path, monkeypatch):
-    """With the env var set, the V2 writeTo path executes against the
-    configured catalog: Spark's catalog resolution must be the failure
-    point (catalog name in the error), proving the partition-transform
-    construction (bucket(N, doc_id) + secondary) and the writeTo call
-    are live code, not an untaken branch."""
-    monkeypatch.setenv("FFORMA_SPARK_ICEBERG_CATALOG", "icecat.db")
-    if _iceberg_jar_present(spark):  # pragma: no cover — jar in prod only
-        pytest.skip("jar present: covered by test_iceberg_roundtrip")
-    with pytest.raises(Exception) as ei:
-        write_output(
-            _tiny(spark), str(tmp_path / "x"), table_name="t1m",
-            secondary="source",
-        )
-    assert "icecat" in str(ei.value)
-
-
 def test_load_table_selects_iceberg_branch(spark, monkeypatch):
     monkeypatch.setenv("FFORMA_SPARK_ICEBERG_CATALOG", "icecat.db")
     if _iceberg_jar_present(spark):  # pragma: no cover
-        pytest.skip("jar present: covered by test_iceberg_roundtrip")
+        pytest.skip("jar present: the catalog resolves")
     with pytest.raises(Exception) as ei:
         load_table(spark, "/root/testdata/sf0.001", "documents").count()
     assert "icecat" in str(ei.value)
-
-
-def test_iceberg_roundtrip(spark, monkeypatch):
-    """Full write→read round-trip through the catalog — runs only where
-    an Iceberg runtime jar is on the classpath (never in this
-    sandbox)."""
-    if not _iceberg_jar_present(spark):
-        pytest.skip("no Iceberg runtime jar in sandbox (SURVEY §1.3)")
-    monkeypatch.setenv("FFORMA_SPARK_ICEBERG_CATALOG", "icecat.db")
-    target = write_output(  # pragma: no cover — jar in prod only
-        _tiny(spark), "/tmp/never-used", table_name="rt_check",
-        secondary="source",
-    )
-    got = spark.read.table(target)
-    assert got.count() == 2
-    assert {r["doc_id"] for r in got.select("doc_id").collect()} == {"1", "2"}
